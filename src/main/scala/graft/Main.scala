@@ -5,7 +5,7 @@ import graft.operators.TagRunner
 import graft.runtime.{Checkpoint, Metrics}
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
@@ -114,6 +114,17 @@ import scala.jdk.CollectionConverters._
   * alias old ledger keys) — configs combining the two are rejected.
   * Engine-side resume for tables belongs to the catalog: read a pinned
   * snapshot, write, then advance the pin.
+  *
+  * Evaluation: without `attributes_output` a run evaluates its pipeline
+  * ONCE, in the output write. The tagger battery runs in place
+  * (`TagRunner.withAttributes`, no attribute join), and an in-flight
+  * analyze rides that write as a `Dataset.observe` aggregate whose
+  * per-task trackers merge on the driver — nothing is pinned with
+  * `localCheckpoint`, and summaries and report are emitted after the
+  * write. Metrics, lineage and the tokens stage read back the written
+  * files. `attributes_output` adds one write of the attribute table,
+  * which the mix then joins back. Unknown top-level keys are rejected
+  * before any Spark job.
   */
 object Main {
 
@@ -136,7 +147,19 @@ object Main {
     } finally spark.stop()
   }
 
+  /** The top-level keys [[run]] reads (the scaladoc's config shape). */
+  val ConfigKeys: Seq[String] = Seq("input", "taggers", "tagger_modules",
+    "experiment", "dedupe", "filter", "span_replacement", "min_text_length",
+    "output", "tokens", "analyze", "attributes_output", "attributes_input",
+    "metrics_output", "ledger")
+
   def run(spark: SparkSession, cfg: JsonNode): Unit = {
+    // a misspelt key ("taggerz") would otherwise silently switch a stage
+    // off: reject it before any Spark job
+    val unknown = cfg.fieldNames().asScala.filterNot(ConfigKeys.contains).toSeq
+    require(unknown.isEmpty,
+      s"unknown config key(s) ${unknown.mkString("\"", "\", \"", "\"")}; " +
+        s"valid keys: ${ConfigKeys.mkString(", ")}")
     val input = cfg.get("input")
     val idColName = opt(input, "id").getOrElse("id")
     val textColName = opt(input, "text").getOrElse("content")
@@ -274,40 +297,30 @@ object Main {
         .withColumn("__ord", monotonically_increasing_id())
       }
 
-    // tag (fused battery)
+    // tag (fused battery). Without an attribute sink the battery runs IN
+    // PLACE: its map is one more column of the scan's narrow pass, so no
+    // id-join shuffles the doc rows and the output write stays the
+    // pipeline's only evaluation. "attributes_output" keeps the
+    // write-then-merge path — the only way to produce that table: the
+    // table is written ONCE and merged back from the written files, so the
+    // battery still never evaluates twice.
     val taggers = Option(cfg.get("taggers")).map(_.elements().asScala.map(_.asText()).toSeq)
       .getOrElse(Seq.empty)
     val experiment = opt(cfg, "experiment").getOrElse("exp")
-    val attrs =
-      if (taggers.nonEmpty)
-        Some(TagRunner.tag(docs, taggers, experiment, taggerModules = taggerModules))
-      else None
-
-    // an enabled analyze block with no file-backed "attributes" list will
-    // read this run's in-flight attribute column — a SECOND evaluation of
-    // everything under it unless the attrs are pinned (below)
-    val analyzeInFlight = Option(cfg.get("analyze"))
-      .filter(a => Option(a.get("enabled")).forall(_.asBoolean(true)))
-      .exists(a => Option(a.get("attributes")).isEmpty)
-
-    // attribute sink: when requested, write ONCE and merge from the
-    // written files so the tagger battery never evaluates twice
-    val attrsForMerge = attrs.map { a =>
-      Option(cfg.get("attributes_output")) match {
-        case Some(p) =>
-          writeCommitted((path, mode) => a.write.mode(mode).parquet(path), p.asText())
-          // merge only THIS run's attribute rows (the pending files'
-          // docs); on resume the attrs table also holds prior runs' rows
-          val all = spark.read.parquet(p.asText())
-          if (resuming) all.join(docs.select(col("id")), Seq("id"), "left_semi")
-          else all
-        case None =>
-          // no attribute sink but analyze will read the in-flight frame:
-          // pin the (id, attributes) rows — narrow, no text — so the
-          // battery runs once instead of once for the analyze collect and
-          // again for the output write
-          if (analyzeInFlight) a.localCheckpoint() else a
-      }
+    val attributesOut = opt(cfg, "attributes_output").filter(_ => taggers.nonEmpty)
+    val tagged =
+      if (taggers.isEmpty || attributesOut.isDefined) docs
+      else TagRunner.withAttributes(docs, taggers, experiment,
+        outputCol = "__tag_attrs", taggerModules = taggerModules)
+    val attrsWritten = attributesOut.map { p =>
+      writeCommitted((path, mode) =>
+        TagRunner.tag(docs, taggers, experiment, taggerModules = taggerModules)
+          .write.mode(mode).parquet(path), p)
+      // merge only THIS run's attribute rows (the pending files' docs); on
+      // resume the attrs table also holds prior runs' rows
+      val all = spark.read.parquet(p)
+      if (resuming) all.join(docs.select(col("id")), Seq("id"), "left_semi")
+      else all
     }
 
     // pre-existing attribute tables — the reference's SPLIT workflow
@@ -378,12 +391,10 @@ object Main {
               overlapThreshold = ng.flatMap(n => Option(n.get("threshold")).map(_.asDouble())).getOrElse(0.7))
           case other => sys.error(s"unknown dedupe mode: $other")
         }
-        val attr = spansDf.select(col("id"),
-          map(lit(dedupAttrName), col("spans")).as("attributes"))
-        // an enabled in-flight analyze reads these spans AND the output
-        // write does — pin the (corpus-wide window) computation like the
-        // tagger attrs, or it runs twice
-        Some(if (analyzeInFlight) attr.localCheckpoint() else attr)
+        // an in-flight analyze rides the output write (see below), so
+        // these spans are computed once, inside that write
+        Some(spansDf.select(col("id"),
+          map(lit(dedupAttrName), col("spans")).as("attributes")))
       }
 
     // cross-run Bloom dedup state — the reference deduper's Bloom-filter
@@ -506,36 +517,34 @@ object Main {
       if (isWarc) t.groupBy(col("id"))
         .agg(first(col("attributes")).as("attributes"))
       else t
+    // fold an in-row attribute map column `c` into "attributes" (later
+    // maps win on duplicate keys, like mergeAttributes): `c` wins when
+    // `cWins`, else the maps already merged win over it
+    def foldAttrs(df: DataFrame, c: String, cWins: Boolean): DataFrame =
+      if (!df.columns.contains("attributes")) df.withColumnRenamed(c, "attributes")
+      else df.withColumn("attributes",
+        if (cWins) Mixer.map_concat_dedup(col("attributes"), col(c))
+        else Mixer.map_concat_dedup(col(c), col("attributes"))).drop(c)
+    // merge order (later wins): loaded tables, this run's taggers (in
+    // place, or the written table), then the dedup / Bloom spans
     val mergedDedupAttr = if (isWarc) None else dedupAttr
-    var withAttrs = Mixer.mergeAttributes(docs,
-      (attrsLoaded ++ attrsForMerge.toSeq ++ mergedDedupAttr ++ bloomAttr)
-        .map(onePerId))
+    var withAttrs = Mixer.mergeAttributes(tagged,
+      (attrsLoaded ++ attrsWritten).map(onePerId))
+    if (tagged ne docs) withAttrs = foldAttrs(withAttrs, "__tag_attrs", cWins = true)
+    withAttrs = Mixer.mergeAttributes(withAttrs,
+      (mergedDedupAttr ++ bloomAttr).toSeq.map(onePerId))
     if (isWarc) dedupAttr.foreach { a =>
       // per-instance dedup spans: 1:1 join on the unique __ord key
       val byOrd = a.select(col("id").cast("long").as("__ord"),
         col("attributes").as("__dedup_attrs"))
       // collectSpans covers every doc (empty lists for no hits), so the
       // 1:1 join always matches and __dedup_attrs is never null
-      withAttrs = withAttrs.join(byOrd, Seq("__ord"), "left")
-      withAttrs =
-        if (withAttrs.columns.contains("attributes"))
-          withAttrs.withColumn("attributes",
-            map_zip_with(col("__dedup_attrs"), col("attributes"),
-              (_, v1, v2) => coalesce(v2, v1)))
-            .drop("__dedup_attrs")
-        else withAttrs.withColumnRenamed("__dedup_attrs", "attributes")
+      withAttrs = foldAttrs(withAttrs.join(byOrd, Seq("__ord"), "left"),
+        "__dedup_attrs", cWins = false)
     }
     // fold the WARC extraction's own attributes in (they were computed in
-    // the same scan; later maps win on duplicate keys, like mergeAttributes)
-    if (isWarc) {
-      withAttrs =
-        if (withAttrs.columns.contains("attributes"))
-          withAttrs.withColumn("attributes",
-            map_zip_with(col("__warc_attrs"), col("attributes"),
-              (_, v1, v2) => coalesce(v2, v1)))
-            .drop("__warc_attrs")
-        else withAttrs.withColumnRenamed("__warc_attrs", "attributes")
-    }
+    // the same scan; the pipeline's own maps win on duplicate keys)
+    if (isWarc) withAttrs = foldAttrs(withAttrs, "__warc_attrs", cWins = false)
     if (dedupEnabled && dedupMode == "documents") {
       // null text keys like the empty string: sha2(null) is null, and a
       // null window key would silently group every null-content doc into
@@ -546,81 +555,33 @@ object Main {
 
     // analyze stage — the `dolma analyze` CLI (cli/analyzer.py +
     // core/analyzer.py:96-188): per attribute name, the distribution of
-    // span SCORES and span LENGTHS, as equal-count summaries. Faithful
-    // details: empty span lists count as one (0,0,0.0) triple
-    // (analyzer.py:124), `__label__` scores cap at 1.0 (the fastText
-    // >1.0-probability fix, analyzer.py:127-133), `regex` filters names
-    // by search. Sources: explicit "attributes" tables (any earlier run)
-    // or this run's merged attribute column. One narrow explode + one
-    // groupBy — the tracker agg is associative (map-side partials), only
-    // #attributes × bins rows ever leave the executors.
-    Option(cfg.get("analyze"))
+    // span SCORES and span LENGTHS, as equal-count summaries
+    // (Binning.attributeSummaries: one aggregate, whatever the source).
+    // Sources: explicit "attributes" tables (any earlier run), read with a
+    // plain `.agg`, or this run's merged attribute column. The in-flight
+    // source RIDES THE OUTPUT WRITE as a CollectMetrics node
+    // (Dataset.observe): per-task tracker maps merge on the driver, so the
+    // pipeline evaluates once and nothing is pinned. Summaries and report
+    // are emitted after the write.
+    val analyzeNode = Option(cfg.get("analyze"))
       .filter(a => Option(a.get("enabled")).forall(_.asBoolean(true)))
-      .foreach { a =>
-        import spark.implicits._
-        val bins = Option(a.get("bins")).map(_.asInt()).getOrElse(1000)
-        val vizBins = Option(a.get("viz_bins")).map(_.asInt()).getOrElse(10)
-        val regex = Option(a.get("regex")).map(_.asText())
-        val showTotal = Option(a.get("total")).exists(_.asBoolean(false))
-        val sources: Seq[DataFrame] = Option(a.get("attributes")) match {
-          case Some(list) => list.elements().asScala.toSeq.map(readAttrTable)
-          case None =>
-            require(withAttrs.columns.contains("attributes"),
-              "analyze: no \"attributes\" tables given and this run has no " +
-                "taggers/dedupe/attributes_input to analyze")
-            Seq(withAttrs.select(col("id"), col("attributes")))
-        }
-        val entries = sources.map(_.select(
-            explode(col("attributes")).as(Seq("name", "spans"))))
-          .reduce(_ unionAll _)
-        val named = regex.map(r => entries.filter(col("name").rlike(r)))
-          .getOrElse(entries)
-        val spansOrZero = when(size(col("spans")) > 0, col("spans"))
-          .otherwise(array(struct(lit(0L).as("start"), lit(0L).as("end"),
-            lit(0.0).as("score"))))
-        val sv = named.select(col("name"), explode(spansOrZero).as("t"))
-          .select(col("name"),
-            when(col("name").contains("__label__"),
-              least(col("t.score"), lit(1.0))).otherwise(col("t.score")).as("score"),
-            (col("t.end") - col("t.start")).cast("double").as("len"))
-        val values = sv.select(concat(col("name"), lit("/score")).as("name"),
-            col("score").as("v"))
-          .unionAll(sv.select(concat(col("name"), lit("/length")).as("name"),
-            col("len").as("v")))
-        val agg = new graft.functions.Binning.InferSummaryAgg(1 << 20, bins)
-        val summaries = values.as[(String, Double)]
-          .groupByKey(_._1).mapValues(_._2)
-          .agg(agg.toColumn.name("s"))
-          .select(col("key").as("name"), col("s.bins").as("bins"),
-            col("s.counts").as("counts"), col("s.total").as("total"),
-            col("s.sum").as("sum"))
-        // one evaluation: the summary rows (#attributes of them) come to
-        // the driver once; the optional parquet write reuses them instead
-        // of re-running the aggregation (and the tagger battery under it)
-        val rows = summaries.collect()
-        Option(a.get("summaries_output")).map(_.asText()).foreach { p =>
-          spark.createDataFrame(
-            java.util.Arrays.asList(rows: _*), summaries.schema)
-            .write.mode("overwrite").parquet(p)
-        }
-        val collected = rows.map { r =>
-          r.getAs[String]("name") -> graft.functions.Binning.Summary(
-            r.getSeq[Double](r.fieldIndex("bins")).toVector,
-            r.getSeq[Long](r.fieldIndex("counts")).toVector,
-            r.getAs[Long]("total"), r.getAs[Double]("sum"))
-        }.toMap
-        val report = graft.tools.AnalyzerReport.render(
-          collected, numVizBins = vizBins, showTotal = showTotal)
-        Option(a.get("report")).map(_.asText()) match {
-          case Some(p) =>
-            val hp = new org.apache.hadoop.fs.Path(p)
-            val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val out = fs.create(hp, true)
-            try out.write((report.mkString("\n") + "\n").getBytes("UTF-8"))
-            finally out.close()
-          case None => report.foreach(println)
-        }
+    val analyzeSummaries = analyzeNode.map { a =>
+      val summaries = graft.functions.Binning.attributeSummaries(col("attributes"),
+        nOut = Option(a.get("bins")).map(_.asInt()).getOrElse(1000),
+        regex = opt(a, "regex")).as("summaries")
+      Option(a.get("attributes")) match {
+        case Some(list) => () =>
+          list.elements().asScala.toSeq.map(t => readAttrTable(t).select(col("attributes")))
+            .reduce(_ unionAll _).agg(summaries).head().getSeq[Row](0)
+        case None =>
+          require(withAttrs.columns.contains("attributes"),
+            "analyze: no \"attributes\" tables given and this run has no " +
+              "taggers/dedupe/attributes_input to analyze")
+          val obs = new org.apache.spark.sql.Observation()
+          withAttrs = withAttrs.observe(obs, summaries)
+          () => obs.get("summaries").asInstanceOf[Seq[Row]]
       }
+    }
 
     // mix. Predicates: the compiled-Column grammar is the hot path;
     // `"syntax": "jq"` (or a jq-looking string the grammar rejects) routes
@@ -750,6 +711,32 @@ object Main {
     val rowsWritten = rowsObs.get.get("rows_written") match {
       case Some(n: Number) => n.longValue()
       case _ => 0L
+    }
+
+    // analyze: the summary rows (#attributes × 2 of them) reach the driver
+    // once — from the write's observation, or from the tables' `.agg`
+    for (a <- analyzeNode; summaryRows <- analyzeSummaries) {
+      val rows = summaryRows()
+      Option(a.get("summaries_output")).map(_.asText()).foreach { p =>
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+          org.apache.spark.sql.Encoders.product[graft.functions.Binning.NamedSummary].schema)
+          .write.mode("overwrite").parquet(p)
+      }
+      val report = graft.tools.AnalyzerReport.render(
+        rows.map(r => r.getString(0) -> graft.functions.Binning.Summary(
+          r.getSeq[Double](1).toVector, r.getSeq[Long](2).toVector,
+          r.getLong(3), r.getDouble(4))).toMap,
+        numVizBins = Option(a.get("viz_bins")).map(_.asInt()).getOrElse(10),
+        showTotal = Option(a.get("total")).exists(_.asBoolean(false)))
+      Option(a.get("report")).map(_.asText()) match {
+        case Some(p) =>
+          val hp = new org.apache.hadoop.fs.Path(p)
+          val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val out = fs.create(hp, true)
+          try out.write((report.mkString("\n") + "\n").getBytes("UTF-8"))
+          finally out.close()
+        case None => report.foreach(println)
+      }
     }
 
     // metrics: rules from the observation (a driver-side row), lineage

@@ -121,7 +121,8 @@ object Analyzer {
       val candDf =
         if (complete) {
           val spark = df.sparkSession
-          // h1 is xxhash64 (long), h2 is murmur3 `hash` (int)
+          // the Gram128HashesExpr pair: h1 is the mix64-finalized long,
+          // h2 the upper 32 bits of the second mix64 lane (int)
           val rows = top.filter(_.getLong(2) >= kth)
             .map(r => (r.getLong(0), r.getInt(1)))
           import spark.implicits._

@@ -1,6 +1,7 @@
 package graft.functions
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** The analyzer's equal-count ("infer") bucket tracker — a faithful port
   * of the reference's streaming summary machinery
@@ -321,5 +322,80 @@ object Binning {
       org.apache.spark.sql.Encoders.kryo[InferTracker]
     def outputEncoder: org.apache.spark.sql.Encoder[Summary] =
       org.apache.spark.sql.Encoders.product[Summary]
+  }
+
+  /** One row of the analyze stage's output: the summary of `name`. */
+  final case class NamedSummary(name: String, bins: Seq[Double], counts: Seq[Long],
+      total: Long, sum: Double)
+
+  /** The `dolma analyze` stage (core/analyzer.py:96-188) as ONE aggregate
+    * over an attribute-map column: per attribute name, the distribution of
+    * span scores (`name/score`) and span lengths (`name/length`) as
+    * equal-count summaries. Faithful details: an empty span list counts as
+    * one (0, 0, 0.0) triple (analyzer.py:124), and `__label__` scores cap
+    * at 1.0 (the fastText >1.0-probability fix, analyzer.py:127-133).
+    *
+    * The buffer is a map of trackers whose merge is lossless
+    * ([[InferTracker.merge]]), so the aggregate serves a plain `.agg` over
+    * attribute tables and a `Dataset.observe` on a pipeline alike. Under
+    * `observe` each task's buffer is merged on the DRIVER: the cost grows
+    * with distinct values × attributes — the same lossless merge a grouped
+    * aggregation would do per name on the executors. */
+  final class AttributeSummaryAgg(n: Int, nOut: Int)
+      extends org.apache.spark.sql.expressions.Aggregator[
+        Map[String, Seq[graft.core.SpanTriple]], AttributeSummaryAgg.Trackers, Seq[NamedSummary]] {
+    import AttributeSummaryAgg.Trackers
+    def zero: Trackers = new Trackers()
+    def reduce(b: Trackers, attrs: Map[String, Seq[graft.core.SpanTriple]]): Trackers = {
+      if (attrs != null) attrs.foreach { case (name, spans) =>
+        val Array(scores, lengths) = b.computeIfAbsent(name,
+          _ => Array(new InferTracker(n), new InferTracker(n)))
+        if (spans == null || spans.isEmpty) { scores.add(0.0); lengths.add(0.0) }
+        else {
+          // `least(score, 1.0)`: Spark orders NaN above every value
+          val cap = name.contains("__label__")
+          spans.foreach { t =>
+            scores.add(if (cap && !(t.score <= 1.0)) 1.0 else t.score)
+            lengths.add((t.end - t.start).toDouble)
+          }
+        }
+      }
+      b
+    }
+    def merge(a: Trackers, b: Trackers): Trackers = {
+      b.forEach { (name, p) =>
+        val mine = a.putIfAbsent(name, p)
+        if (mine != null) { mine(0).merge(p(0)); mine(1).merge(p(1)) }
+      }
+      a
+    }
+    def finish(b: Trackers): Seq[NamedSummary] =
+      b.asScala.toSeq.sortBy(_._1).flatMap { case (name, p) =>
+        Seq("score" -> p(0), "length" -> p(1)).map { case (kind, t) =>
+          val s = t.summarize(nOut)
+          NamedSummary(s"$name/$kind", s.bins, s.counts, s.total, s.sum)
+        }
+      }
+    def bufferEncoder: org.apache.spark.sql.Encoder[Trackers] =
+      org.apache.spark.sql.Encoders.kryo[Trackers]
+    def outputEncoder: org.apache.spark.sql.Encoder[Seq[NamedSummary]] =
+      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[NamedSummary]]()
+  }
+
+  object AttributeSummaryAgg {
+    /** attribute name → its (score, length) tracker pair */
+    type Trackers = java.util.HashMap[String, Array[InferTracker]]
+  }
+
+  /** The analyze aggregate over attribute-map column `attrs`: an array of
+    * [[NamedSummary]] structs, sorted by name. `regex` keeps the attribute
+    * names it finds a match in (`rlike`), as the reference's `--regex`. */
+  def attributeSummaries(attrs: org.apache.spark.sql.Column, nOut: Int,
+      regex: Option[String]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{map_filter, udaf}
+    val named = regex.fold(attrs)(r => map_filter(attrs, (k, _) => k.rlike(r)))
+    udaf(new AttributeSummaryAgg(1 << 20, nOut),
+      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[
+        Map[String, Seq[graft.core.SpanTriple]]]())(named)
   }
 }

@@ -42,14 +42,20 @@ object Mixer {
     * and it will happily broadcast 60k span maps (driver collect +
     * per-task hash build). Pin sort-merge; genuinely small side tables
     * (blocklists, dims) should be joined by the caller with an explicit
-    * `broadcast()`. */
+    * `broadcast()`.
+    *
+    * An `attributes` column already on `docs` (e.g. tagged in place by
+    * `TagRunner.withAttributes`) is the EARLIEST map: the tables win over
+    * it on duplicate keys. */
   def mergeAttributes(docs: DataFrame, attrTables: Seq[DataFrame]): DataFrame = {
     val joined = attrTables.zipWithIndex.foldLeft(docs) { case (acc, (attrs, i)) =>
       val renamed = attrs.withColumnRenamed("attributes", s"__attrs_$i").hint("merge")
       acc.join(renamed, Seq("id"), "left")
     }
-    val attrCols = attrTables.indices.map(i => col(s"__attrs_$i"))
-    if (attrCols.isEmpty) joined
+    val attrCols =
+      (if (docs.columns.contains("attributes")) Seq(col("attributes")) else Nil) ++
+        attrTables.indices.map(i => col(s"__attrs_$i"))
+    if (attrTables.isEmpty) joined
     else {
       val mapType = org.apache.spark.sql.types.MapType(
         org.apache.spark.sql.types.StringType,

@@ -676,8 +676,9 @@ class MainSpec extends AnyFunSuite {
          |}""".stripMargin
     Main.run(spark, new com.fasterxml.jackson.databind.ObjectMapper().readTree(config))
     assert(spark.read.parquet(s"$dir/out").count() == 3)
-    // without the localCheckpoint pin the battery would evaluate once for
-    // the analyze collect and again for the output write (6 calls)
+    // the analyze aggregate rides the output write (Dataset.observe), so
+    // the battery evaluates once, inside that write (a separate analyze
+    // job would make it 6 calls)
     assert(CountingTagger.calls.get() == 3,
       s"battery ran ${CountingTagger.calls.get()} predicts for 3 docs")
   }
@@ -740,6 +741,156 @@ class MainSpec extends AnyFunSuite {
       Files.readAllBytes(java.nio.file.Paths.get(s"$dir/report.txt")), "UTF-8")
     assert(report.contains("e__char_length_v1__length/score"))
     assert(report.contains("count")) // table header rendered
+  }
+
+  private def om = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  private def codeInput(dir: String, n: Long): String = {
+    val p = s"$dir/in"
+    graft.sources.CodeDocs.generate(spark, n).toDF()
+      .withColumn("id", concat_ws(":", col("repo"), col("path"), col("commit")))
+      .write.parquet(p)
+    p
+  }
+
+  private def summaries(path: String): Map[String, org.apache.spark.sql.Row] =
+    spark.read.parquet(path).collect().map(r => r.getAs[String]("name") -> r).toMap
+
+  test("analyze: in-flight summaries equal the file-backed ones over the same attributes") {
+    val dir = Files.createTempDirectory("graft-analyze-eq").toString
+    val in = codeInput(dir, 600L)
+    def config(out: String, extra: String) =
+      s"""{
+         |  "input": {"format": "parquet", "path": "$in", "id": "id", "text": "content"},
+         |  "taggers": ["gopher_v2", "pii_regex_with_counts_fast_v2", "char_length_v1"],
+         |  "experiment": "e",
+         |  "dedupe": {"enabled": true, "mode": "documents"},
+         |  "output": {"path": "$dir/$out", "format": "parquet"},
+         |  $extra
+         |}""".stripMargin
+    Main.run(spark, om.readTree(config("out1",
+      s""""analyze": {"bins": 50, "summaries_output": "$dir/s1", "report": "$dir/r1.txt"}""")))
+    Main.run(spark, om.readTree(config("out2",
+      s""""attributes_output": "$dir/attrs",
+         | "analyze": {"bins": 50, "attributes": ["$dir/attrs"],
+         |   "summaries_output": "$dir/s2", "report": "$dir/r2.txt"}""".stripMargin)))
+    val inFlight = summaries(s"$dir/s1")
+    val fromFiles = summaries(s"$dir/s2")
+    assert(inFlight.nonEmpty)
+    assert(inFlight.keySet == fromFiles.keySet)
+    inFlight.foreach { case (name, a) =>
+      val b = fromFiles(name)
+      for (f <- Seq("bins", "counts", "total"))
+        assert(a.getAs[Any](f) == b.getAs[Any](f), s"$name: $f differs")
+      // summation order differs between the two sources
+      val (sa, sb) = (a.getAs[Double]("sum"), b.getAs[Double]("sum"))
+      assert(math.abs(sa - sb) <= 1e-9 * math.max(math.abs(sa), math.abs(sb)),
+        s"$name: sum $sa vs $sb")
+    }
+  }
+
+  test("single evaluation: one executed plan scans the input, nothing stays persisted") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    val dir = Files.createTempDirectory("graft-one-eval").toString
+    val in = codeInput(dir, 300L)
+    val config =
+      s"""{
+         |  "input": {"format": "parquet", "path": "$in", "id": "id", "text": "content"},
+         |  "taggers": ["gopher_v2", "pii_regex_with_counts_fast_v2"],
+         |  "experiment": "e",
+         |  "dedupe": {"enabled": true, "mode": "documents"},
+         |  "analyze": {"bins": 20, "summaries_output": "$dir/summaries",
+         |    "report": "$dir/report.txt"},
+         |  "output": {"path": "$dir/out", "format": "parquet"}
+         |}""".stripMargin
+    object Scans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+      def roots(plan: SparkPlan): Seq[String] = collectWithSubqueries(plan) {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+      }.flatten
+    }
+    val scanning = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "__graft_marker")) marker.countDown()
+        else if (Scans.roots(qe.executedPlan).exists(_.endsWith(in))) scanning.add(funcName)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    spark.listenerManager.register(listener)
+    try {
+      Main.run(spark, om.readTree(config))
+      // listener events arrive in order: once the marker query is seen,
+      // every plan of the run has been reported
+      spark.range(1).toDF("__graft_marker").collect()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+
+    assert(scanning.size == 1, s"plans scanning the input: $scanning")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore).isEmpty,
+      "the run left persisted (localCheckpoint) blocks behind")
+    assert(graft.operators.TagRunner.lastDocsTagged.get.value == 300L)
+    assert(spark.read.parquet(s"$dir/summaries").count() > 0)
+  }
+
+  test("analyze over an empty input completes and writes zero summary rows") {
+    val dir = Files.createTempDirectory("graft-analyze-empty").toString
+    Seq.empty[(String, String)].toDF("id", "content").write.parquet(s"$dir/in")
+    val config =
+      s"""{
+         |  "input": {"format": "parquet", "path": "$dir/in", "id": "id", "text": "content"},
+         |  "taggers": ["char_length_v1"],
+         |  "dedupe": {"enabled": true, "mode": "documents"},
+         |  "analyze": {"summaries_output": "$dir/summaries", "report": "$dir/report.txt"},
+         |  "output": {"path": "$dir/out", "format": "parquet"}
+         |}""".stripMargin
+    import scala.concurrent.ExecutionContext.Implicits.global
+    // an observation that never completes would block Main.run forever
+    scala.concurrent.Await.result(
+      scala.concurrent.Future(Main.run(spark, om.readTree(config))),
+      scala.concurrent.duration.Duration(120, "s"))
+    assert(spark.read.parquet(s"$dir/out").count() == 0)
+    assert(spark.read.parquet(s"$dir/summaries").count() == 0)
+  }
+
+  test("attribute merge order: loaded tables < in-place taggers < dedup spans") {
+    val dir = Files.createTempDirectory("graft-merge-order").toString
+    Seq(("a", "shared para\nalpha"), ("b", "shared para\nbeta"))
+      .toDF("id", "content").write.parquet(s"$dir/in")
+    val lengthKey = "e__char_length_v1__length"
+    val stripKey = "e__char_length_strip_ws_v1__length_no_ws"
+    Seq("a", "b").map(id => graft.core.AttrRow(id, Map(
+        lengthKey -> Seq(graft.core.SpanTriple(0, 1, 999.0)),
+        "e__loaded_only" -> Seq(graft.core.SpanTriple(0, 1, 5.0)))))
+      .toDS().write.parquet(s"$dir/loaded")
+    val config =
+      s"""{
+         |  "input": {"format": "parquet", "path": "$dir/in", "id": "id", "text": "content"},
+         |  "taggers": ["char_length_v1", "char_length_strip_ws_v1"],
+         |  "experiment": "e",
+         |  "attributes_input": ["$dir/loaded"],
+         |  "dedupe": {"enabled": true, "mode": "paragraphs", "attribute_name": "$stripKey"},
+         |  "analyze": {"summaries_output": "$dir/summaries", "report": "$dir/report.txt"},
+         |  "output": {"path": "$dir/out", "format": "parquet"}
+         |}""".stripMargin
+    Main.run(spark, om.readTree(config))
+    val sums = summaries(s"$dir/summaries").map { case (n, r) => n -> r.getAs[Double]("sum") }
+    assert(sums(s"$lengthKey/score") == 33.0)   // the tagger won over the loaded 999s
+    assert(sums("e__loaded_only/score") == 10.0) // loaded-only keys survive
+    // the dedup spans won over the tagger: doc b's repeated paragraph
+    // (score 1.0) plus doc a's empty list counted as one 0.0 triple
+    assert(sums(s"$stripKey/score") == 1.0)
+  }
+
+  test("an unknown top-level config key fails before any Spark job") {
+    val e = intercept[IllegalArgumentException] {
+      Main.run(spark, om.readTree(
+        """{"input": {"format": "parquet", "path": "/nonexistent/graft-in"},
+          | "taggerz": ["gopher_v2"],
+          | "output": {"path": "/nonexistent/graft-out"}}""".stripMargin))
+    }
+    assert(e.getMessage.contains("\"taggerz\""))
+    Main.ConfigKeys.foreach(k => assert(e.getMessage.contains(k)))
   }
 }
 

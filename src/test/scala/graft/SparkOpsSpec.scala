@@ -132,6 +132,19 @@ class SparkOpsSpec extends AnyFunSuite {
     val d2attrs = merged.filter(col("id") === "d2")
       .select(size(map_keys(col("attributes")))).as[Int].head()
     assert(d2attrs == 0)
+    // an attributes column already on the docs merges first: the table
+    // wins on a shared key, the docs' other keys survive
+    val key = "e__char_length_v1__length"
+    val preTagged = TagRunner.withAttributes(docs,
+      Seq("char_length_v1", "whitespace_tokenizer_v1"), "e")
+    val table = attrs.select(col("id"), map(lit(key), array(struct(lit(0L).as("start"),
+      lit(1L).as("end"), lit(42.0).as("score")))).as("attributes"))
+    def d1(df: org.apache.spark.sql.DataFrame) = df.filter(col("id") === "d1")
+      .select(TagRunner.attrScore(key), size(map_keys(col("attributes"))))
+      .as[(Double, Int)].head()
+    val (score, nKeys) = d1(Mixer.mergeAttributes(preTagged, Seq(table)))
+    assert(score == 42.0)
+    assert(nKeys == d1(preTagged)._2)
   }
 
   test("histogram aggregator: merge associative + matches expression form") {

@@ -191,19 +191,15 @@ object Dedup {
       maxIters: Int = 20): DataFrame = {
     // symmetrize in ONE pass over the pair table — explode of the two
     // orientations, not a unionAll whose branches would each re-execute
-    // the (possibly expensive) upstream pair-candidate DAG — then
-    // partition + sort once on the per-round join key: localCheckpoint
-    // preserves outputPartitioning/outputOrdering in the LogicalRDD, so
-    // every round's sort-merge join streams the edge side with no
-    // exchange and no re-sort — only the tiny label table moves per
-    // round (at any scale the edge table is the big side)
+    // the (possibly expensive) upstream pair-candidate DAG. The
+    // checkpoint keeps no partitioning (its scan reports
+    // UnknownPartitioning), so each round's join or groupBy exchanges the
+    // edge table on its own key.
     val sym = pairs
       .select(explode(array(
         struct(idACol.as("a"), idBCol.as("b")),
         struct(idBCol.as("a"), idACol.as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
-      .repartition(col("b"))
-      .sortWithinPartitions(col("b"))
       .localCheckpoint()
     // empty pair table: no nodes, nothing to propagate (and the per-round
     // Observation below would never fire over an empty checkpoint plan)

@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   *   into `bands` × `rowsPerBand` → explode bands → shuffle on band hash →
   *   candidate pairs within a bucket → exact Jaccard verify.
   *
-  * Scale: the only wide ops are the band-bucket groupBy and the pair
-  * self-join inside buckets; bucket sizes are bounded by banding (tune
+  * Scale: the only wide op is the exchange on the band bucket, shared by
+  * the bucket-size cap and the pair self-join ([[BucketJoin]]); bucket
+  * sizes are bounded by banding (tune
   * bands/rows for target similarity s ≈ (1/b)^(1/r)). Giant buckets from
   * degenerate content (empty/boilerplate) are capped by `maxBucketSize`.
   */
@@ -53,10 +54,7 @@ object MinHashLSH {
   def signature(textCol: Column, k: Int, numPerms: Int): Column =
     graft.functions.Hashing.minhashSignature(textCol, k, numPerms)
 
-  /** Band-bucket hash of band `b` of a signature column (shared by the
-    * bucket expansion and the first-match-band pair dedup predicate — the
-    * two MUST stay the same expression or the dedup would diverge from
-    * the join on hash collisions). */
+  /** Band-bucket hash of band `b` of a signature column. */
   private def bandBucket(sig: Column, b: Int, rowsPerBand: Int): Column =
     xxhash64(concat_ws(",",
       slice(sig, b * rowsPerBand + 1, rowsPerBand).cast("array<string>")))
@@ -64,98 +62,52 @@ object MinHashLSH {
   /** Documents → (id, band, bandHash) rows. */
   def bandedBuckets(df: DataFrame, idCol: Column, textCol: Column,
       k: Int = 5, numPerms: Int = 32, bands: Int = 8): DataFrame =
-    bandedBucketsWithArray(df, idCol, textCol, k, numPerms, bands)
+    BucketJoin.explode(bandArrays(df, idCol, textCol, k, numPerms, bands), col("__ab"))
       .select(col("id"), col("sig"), col("band"), col("bucket"))
 
-  /** Like [[bandedBuckets]] but each exploded row also carries the doc's
-    * FULL band-bucket array `__ab` (computed once per document, 8 bytes ×
-    * bands): the first-match pair-dedup predicate reads earlier bands from
-    * the two arrays instead of re-hashing signature slices per pair row —
-    * same bucket values, O(1) expression nodes per band instead of a
+  /** Documents → (id, sig, `__ab`) rows: `__ab` is the doc's FULL
+    * band-bucket array (computed once per document, 8 bytes × bands). The
+    * first-match pair-dedup predicate reads earlier bands from the two
+    * arrays instead of re-hashing signature slices per pair row — same
+    * bucket values, O(1) expression nodes per band instead of a
     * bands²-node when-chain. */
-  private def bandedBucketsWithArray(df: DataFrame, idCol: Column, textCol: Column,
+  private def bandArrays(df: DataFrame, idCol: Column, textCol: Column,
       k: Int, numPerms: Int, bands: Int): DataFrame = {
     val rowsPerBand = numPerms / bands
     require(bands * rowsPerBand == numPerms, "bands must divide numPerms")
-    val sig = signature(textCol, k, numPerms)
-    val withSig = df.select(idCol.as("id"), sig.as("sig"))
+    val withSig = df.select(idCol.as("id"), signature(textCol, k, numPerms).as("sig"))
     val allBuckets = array((0 until bands).map(b =>
       bandBucket(col("sig"), b, rowsPerBand)): _*)
     withSig.select(col("id"), col("sig"), allBuckets.as("__ab"))
-      .select(col("id"), col("sig"), col("__ab"),
-        posexplode(col("__ab")).as(Seq("band", "bucket")))
   }
 
   /** Candidate near-duplicate pairs with estimated Jaccard from signature
-    * agreement, deduplicated across bands. `maxBucketSize` guards against
-    * degenerate buckets (skew guard). Dropped work is NOT silent: pass
-    * `dropObs` (a fresh [[Observation]]) and after any action on the
-    * result read `dropped_rows` / `dropped_buckets` — at 100 TB a cap
-    * that discards hot buckets must show up in metrics, not read as full
-    * coverage. The cap itself is a groupBy-count joined back (bucket keys
-    * aggregate map-side and the tiny size table joins on the same key —
-    * no per-row sort the equivalent count-window would do). AQE caveat:
-    * a completely EMPTY final output can be empty-propagated over the
-    * metrics node at runtime (Observation reports {}); audit runs that
-    * must count drops even then should disable
-    * `spark.sql.adaptive.enabled` (Spec-pinned behavior). */
+    * agreement, deduplicated across bands. The bucket join, the
+    * `maxBucketSize` skew guard and its `dropObs` metrics
+    * (`dropped_rows` / `dropped_buckets`) are [[BucketJoin.pairs]]'s.
+    *
+    * Pair dedup is shuffle-free: a pair colliding in several bands is
+    * emitted ONLY from the lowest colliding band — the predicate compares
+    * the precomputed band-bucket arrays of the two docs over bands <
+    * `band` and requires every earlier bucket pair to differ (bucket-hash
+    * inequality, the exact negation of the join condition). With no
+    * bucket dropped, the emitted rows equal what a
+    * `groupBy(id_a, id_b).max(est_jaccard)` over all colliding bands
+    * produces (est_jaccard comes from the full signatures and is
+    * band-invariant). Under a finite cap they do not: the predicate reads
+    * the full, pre-cap arrays, so a pair whose lowest colliding band fell
+    * in a dropped bucket is suppressed in every surviving band too, and
+    * `dropObs` does not count it. */
   def nearDuplicatePairs(df: DataFrame, idCol: Column, textCol: Column,
       k: Int = 5, numPerms: Int = 32, bands: Int = 8,
       minJaccard: Double = 0.5, maxBucketSize: Int = 1000,
       dropObs: Option[Observation] = None): DataFrame = {
-    // materialize the bucketed sketch table ONCE, pre-partitioned and
-    // sorted on the bucket key: localCheckpoint preserves
-    // outputPartitioning/outputOrdering in the LogicalRDD, so the size
-    // aggregate and BOTH self-join sides below reuse the partitioning
-    // with no further exchange and no sort — the former lazy shape
-    // recomputed the signature subtree once per plan reference (2 join
-    // sides + 2 size subtrees) and shuffled it twice for the hinted SMJ.
-    // The materialization holds the same bytes the self-join's shuffle
-    // files held before, and the sketch is computed exactly once.
-    val buckets = bandedBucketsWithArray(df, idCol, textCol, k, numPerms, bands)
-      .repartition(col("band"), col("bucket"))
-      .sortWithinPartitions(col("band"), col("bucket"))
-      .localCheckpoint()
-    val sizes = buckets.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("__bsize"))
-    val marked = buckets.join(sizes, Seq("band", "bucket"))
-    // observe on the MAIN stream (post-join), not the aggregated side —
-    // the tiny size table broadcasts, and metrics inside a broadcast
-    // exchange never reach the Observation. Each oversized bucket's rows
-    // count 1 each (Σ = dropped_rows) and 1/bsize each (Σ = exact
-    // dropped-bucket count, rounded against fp drift).
-    val observed = dropObs.map(o => marked.observe(o,
-        sum(when(col("__bsize") > maxBucketSize, 1L).otherwise(0L))
-          .as("dropped_rows"),
-        round(sum(when(col("__bsize") > maxBucketSize,
-            lit(1.0) / col("__bsize")).otherwise(lit(0.0))))
-          .cast("long").as("dropped_buckets")))
-      .getOrElse(marked)
-    val capped = observed.filter(col("__bsize") <= maxBucketSize)
-    val a = capped.select(col("band"), col("bucket"), col("id").as("id_a"),
-      col("sig").as("sig_a"), col("__ab").as("__ab_a"))
-    val b = capped.select(col("band"), col("bucket"), col("id").as("id_b"),
-      col("sig").as("sig_b"), col("__ab").as("__ab_b"))
-    // first-match-band pair dedup, shuffle-free: a pair colliding in
-    // several bands is emitted ONLY from the lowest colliding band — the
-    // predicate compares the PRECOMPUTED band-bucket arrays of the two
-    // docs over bands < `band` and requires every earlier bucket pair to
-    // differ (bucket-hash inequality, the exact negation of the join
-    // condition, so the emitted row set is identical to what the former
-    // groupBy(id_a, id_b).max(est_jaccard) produced — est_jaccard is
-    // computed from the full signatures and is band-invariant). Removes
-    // the exchange over the full candidate pair stream, which at scale is
-    // the largest intermediate of the whole operator.
     val firstMatch = size(filter(
       zip_with(slice(col("__ab_a"), lit(1), col("band")),
         slice(col("__ab_b"), lit(1), col("band")), (x, y) => x === y),
       e => e)) === 0
-    // merge hint, same rationale as exactJaccardPairs: the static
-    // optimizer underestimates the exploded bucket table and broadcasts
-    // it — a driver-built hash relation of one bucket row per (doc, band),
-    // wrong at any scale; the self-join must shuffle on the bucket key
-    a.hint("merge").join(b, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
+    BucketJoin.pairs(bandArrays(df, idCol, textCol, k, numPerms, bands),
+        col("__ab"), maxBucketSize, dropObs)
       .filter(firstMatch)
       .select(col("id_a"), col("id_b"),
         (size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), e => e))

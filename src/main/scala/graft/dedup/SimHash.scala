@@ -28,80 +28,36 @@ object SimHash {
     shiftright(sig, blk * 16).bitwiseAND(lit(0xffffL))
 
   /** Near-duplicate pairs with Hamming ≤ `maxDistance` (≤ 16 supported by
-    * the 4-block pigeonhole index). One shuffle on block value.
+    * the 4-block pigeonhole index). The four 16-bit blocks are the bucket
+    * array of [[BucketJoin.pairs]]: one shuffle on block value, and the
+    * same skew guard as [[MinHashLSH.nearDuplicatePairs]] — short,
+    * templated or empty-ish docs concentrate signature blocks, so buckets
+    * over `maxBucketSize` rows are dropped, observably through `dropObs`
+    * (`dropped_rows` / `dropped_buckets`).
     *
-    * Pair-dedup is shuffle-free: a pair whose signatures agree on several
+    * Pair dedup is shuffle-free: a pair whose signatures agree on several
     * 16-bit blocks is emitted ONLY from the lowest matching block — the
     * "earlier blocks differ" predicate is computed from the two
-    * signatures already riding the join row, so the former
-    * `groupBy(id_a, id_b).min(distance)` exchange over the full candidate
-    * pair stream (quadratic in hot-bucket size) disappears. The Hamming
-    * distance is block-independent, so the emitted row is identical to
-    * what the min-aggregate produced.
-    *
-    * Skew guard (same contract as [[MinHashLSH.nearDuplicatePairs]]):
-    * short/templated/empty-ish docs concentrate signature blocks, and the
-    * within-bucket pair join is quadratic in bucket size, so buckets over
-    * `maxBucketSize` rows are dropped — observably: pass `dropObs` (a
-    * fresh [[Observation]]) and read `dropped_rows` / `dropped_buckets`
-    * after an action. The cap is a groupBy-count joined back on the block
-    * key (map-side combined; the tiny size table broadcasts). AQE caveat
-    * shared with MinHashLSH: a completely empty final output can be
-    * empty-propagated over the metrics node (Observation reports {});
-    * audit runs that must count drops even then should disable
-    * `spark.sql.adaptive.enabled`. */
+    * signatures already riding the join row. The Hamming distance is
+    * block-independent, so with no bucket dropped the emitted rows equal
+    * what a `groupBy(id_a, id_b).min(distance)` produces. Under a finite
+    * cap they do not: the predicate reads the full signatures, so a pair
+    * whose lowest matching block fell in a dropped bucket is suppressed
+    * in every surviving block too, and `dropObs` does not count it. */
   def nearDuplicatePairs(df: DataFrame, idCol: Column, textCol: Column,
       maxDistance: Int = 3, maxBucketSize: Int = 1000,
       dropObs: Option[Observation] = None): DataFrame = {
     val sigs = df.select(idCol.as("id"), simhash64(textCol).as("sig"))
-    val blocks = (0 until 4).map { blk =>
-      struct(lit(blk).as("block"), blockKey(col("sig"), blk).as("key"))
-    }
-    // materialize the exploded block table ONCE, pre-partitioned and
-    // sorted on the block key (MinHashLSH rationale): the size aggregate
-    // and both self-join sides reuse the preserved partitioning with no
-    // further exchange/sort, and the signature scan runs exactly once
-    // instead of once per plan reference.
-    val exploded = sigs.select(col("id"), col("sig"), explode(array(blocks: _*)).as("b"))
-      .select(col("id"), col("sig"), col("b.block").as("block"), col("b.key").as("key"))
-      .repartition(col("block"), col("key"))
-      .sortWithinPartitions(col("block"), col("key"))
-      .localCheckpoint()
-    val capped =
-      if (maxBucketSize == Int.MaxValue && dropObs.isEmpty) exploded
-      else {
-        val sizes = exploded.groupBy(col("block"), col("key"))
-          .agg(count(lit(1)).as("__bsize"))
-        val marked = exploded.join(sizes, Seq("block", "key"))
-        // observe on the MAIN stream (post-join), not the aggregated side —
-        // the tiny size table broadcasts, and metrics inside a broadcast
-        // exchange never reach the Observation. Each oversized bucket's
-        // rows count 1 each (Σ = dropped_rows) and 1/bsize each (Σ = exact
-        // dropped-bucket count, rounded against fp drift).
-        val observed = dropObs.map(o => marked.observe(o,
-            sum(when(col("__bsize") > maxBucketSize, 1L).otherwise(0L))
-              .as("dropped_rows"),
-            round(sum(when(col("__bsize") > maxBucketSize,
-                lit(1.0) / col("__bsize")).otherwise(lit(0.0))))
-              .cast("long").as("dropped_buckets")))
-          .getOrElse(marked)
-        observed.filter(col("__bsize") <= maxBucketSize).drop("__bsize")
-      }
-    val a = capped.select(col("block"), col("key"), col("id").as("id_a"), col("sig").as("sig_a"))
-    val b = capped.select(col("block"), col("key"), col("id").as("id_b"), col("sig").as("sig_b"))
-    // emit only from the lowest matching block: for block k require every
-    // block e < k to DIFFER between the two signatures (recomputed from
-    // sig_a/sig_b — the join key equality guarantees block k matches)
-    val firstMatch = (1 until 4).foldLeft(when(col("block") === 0, lit(true))) {
+    // for block k require every block e < k to DIFFER between the two
+    // signatures (the join key equality guarantees block k matches)
+    val firstMatch = (1 until 4).foldLeft(when(col("band") === 0, lit(true))) {
       (acc, blk) =>
-        acc.when(col("block") === blk,
+        acc.when(col("band") === blk,
           (0 until blk).map(e =>
             blockKey(col("sig_a"), e) =!= blockKey(col("sig_b"), e)).reduce(_ && _))
     }
-    // merge hint (MinHashLSH rationale): the exploded sig table is
-    // corpus-sized — it must never become a driver-built broadcast
-    a.hint("merge").join(b, Seq("block", "key"))
-      .filter(col("id_a") < col("id_b"))
+    BucketJoin.pairs(sigs, array((0 until 4).map(blockKey(col("sig"), _)): _*),
+        maxBucketSize, dropObs)
       .filter(firstMatch)
       .select(col("id_a"), col("id_b"), hamming(col("sig_a"), col("sig_b")).as("distance"))
       .filter(col("distance") <= maxDistance)

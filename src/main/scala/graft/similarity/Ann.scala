@@ -105,22 +105,17 @@ object Ann {
     * merely-near pair at angle θ shares the bucket with probability
     * (1-θ/π)^bits — raise recall by unioning several `seed`s
     * (independent hash tables), the standard Charikar amplification;
-    * each table is one more narrow scan + bucket shuffle.
+    * each table adds one bucket row per vector to the same scan and
+    * bucket shuffle.
     *
     * Scale: vectors never fan out (one bucket row per vector per table);
     * the wide ops are the bucket self-join and the per-pair verify.
     * Degenerate buckets (zero vectors, constant embeddings) are capped by
-    * `maxBucketSize` — same skew guard as [[graft.dedup.MinHashLSH]], and
-    * like there the cap is observable: pass `dropObs` and read
-    * `dropped_rows` / `dropped_buckets` after an action, so truncated
-    * coverage never silently reads as full coverage. The cap is a
-    * groupBy-count joined back on the bucket key (map-side combined; no
-    * per-row sort a count-window would pay). AQE caveat: if the query's
-    * FINAL output comes back completely empty, AQE's runtime
-    * empty-relation propagation may eliminate the metrics node with the
-    * emptied plan and the Observation reports {} — for an audit run that
-    * must count drops even at zero output, disable
-    * `spark.sql.adaptive.enabled` (Spec-pinned behavior).
+    * `maxBucketSize` — the skew guard of [[graft.dedup.BucketJoin.pairs]],
+    * which the MinHash and SimHash pair operators share — and the cap is
+    * observable: pass `dropObs` and read `dropped_rows` /
+    * `dropped_buckets` after an action, so truncated coverage never
+    * silently reads as full coverage.
     *
     * Degenerate zero-norm vectors cosine to NaN (0/0), and Spark orders
     * NaN above every double — an unguarded `>= minCosine` would emit
@@ -130,42 +125,12 @@ object Ann {
   def cosineNearDupPairs(df: DataFrame, idCol: Column, vecCol: Column,
       dim: Int, minCosine: Double, bits: Int = 12, seeds: Seq[Long] = Seq(42L),
       maxBucketSize: Int = 1000, dropObs: Option[Observation] = None): DataFrame = {
-    val tables = seeds.zipWithIndex.map { case (seed, t) =>
-      df.select(idCol.as("id"), vecCol.as("v"), lit(t).as("table"),
-        hyperplaneBucket(vecCol, dim, bits, seed).as("bucket"))
-    }
-    // materialize the bucketed vector table ONCE, pre-partitioned and
-    // sorted on the bucket key (MinHashLSH rationale): size aggregate and
-    // both self-join sides reuse the preserved partitioning — no further
-    // exchange/sort, hyperplane projections computed exactly once.
-    val bucketed = tables.reduce(_ unionAll _)
-      .repartition(col("table"), col("bucket"))
-      .sortWithinPartitions(col("table"), col("bucket"))
-      .localCheckpoint()
-    val sizes = bucketed.groupBy(col("table"), col("bucket"))
-      .agg(count(lit(1)).as("__bsize"))
-    val marked = bucketed.join(sizes, Seq("table", "bucket"))
-    // observe on the MAIN stream (post-join), not the aggregated side —
-    // the tiny size table broadcasts, and metrics inside a broadcast
-    // exchange never reach the Observation. Each oversized bucket's rows
-    // count 1 each (Σ = dropped_rows) and 1/bsize each (Σ = exact
-    // dropped-bucket count, rounded against fp drift).
-    val observed = dropObs.map(o => marked.observe(o,
-        sum(when(col("__bsize") > maxBucketSize, 1L).otherwise(0L))
-          .as("dropped_rows"),
-        round(sum(when(col("__bsize") > maxBucketSize,
-            lit(1.0) / col("__bsize")).otherwise(lit(0.0))))
-          .cast("long").as("dropped_buckets")))
-      .getOrElse(marked)
-    val capped = observed.filter(col("__bsize") <= maxBucketSize)
-    val a = capped.select(col("table"), col("bucket"), col("id").as("id_a"), col("v").as("va"))
-    val b = capped.select(col("table"), col("bucket"), col("id").as("id_b"), col("v").as("vb"))
-    // merge hint (MinHashLSH rationale): the bucketed vector table is
-    // corpus-sized — it must never become a driver-built broadcast
-    val verified = a.hint("merge").join(b, Seq("table", "bucket"))
-      .filter(col("id_a") < col("id_b"))
+    val verified = graft.dedup.BucketJoin.pairs(
+        df.select(idCol.as("id"), vecCol.as("v")),
+        array(seeds.map(hyperplaneBucket(col("v"), dim, bits, _)): _*),
+        maxBucketSize, dropObs)
       .select(col("id_a"), col("id_b"),
-        nanvl(cosine(col("va"), col("vb")), lit(-1.0)).as("cosine"))
+        nanvl(cosine(col("v_a"), col("v_b")), lit(-1.0)).as("cosine"))
       .filter(col("cosine") >= minCosine)
     // cross-table pair dedup: a vector has exactly ONE bucket per table,
     // so with a single hash table every pair is generated at most once

@@ -502,28 +502,111 @@ class SparkOpsSpec extends AnyFunSuite {
     assert(pairs.forall(p => !p._3.isNaN))
   }
 
-  test("bucket-cap plan shape: groupBy-count + join, no Window sort; metrics node present") {
-    // the r4 cap used count().over(Window.partitionBy(bucket)) — a full
-    // sort-based window over every bucket row; the r5 shape must keep
-    // the plan Window-free and carry the CollectMetrics node only when
-    // a dropObs is attached
-    val docs = (0 until 8).map(i => (i.toString, s"text body number $i with words")).toDF("id", "text")
-    val plain = MinHashLSH.nearDuplicatePairs(docs, col("id"), col("text"),
-      k = 2, numPerms = 16, bands = 4)
-    val plainPlan = plain.queryExecution.optimizedPlan.toString
-    assert(!plainPlan.contains("Window"), "cap must not use a sort-based window")
-    assert(!plainPlan.contains("CollectMetrics"), "no metrics node without dropObs")
-    val obs = new org.apache.spark.sql.Observation("plan-shape-drops")
-    val observed = MinHashLSH.nearDuplicatePairs(docs, col("id"), col("text"),
-      k = 2, numPerms = 16, bands = 4, dropObs = Some(obs))
-    val obsPlan = observed.queryExecution.optimizedPlan.toString
-    assert(!obsPlan.contains("Window") && obsPlan.contains("CollectMetrics"))
-    val vecs = (0L until 8L).map(i => (i, Array.fill(4)(i.toFloat + 1)))
-    val cosPlan = graft.similarity.Ann.cosineNearDupPairs(
-      vecs.toDF("vec_id", "embedding"), col("vec_id"), col("embedding"),
-      dim = 4, minCosine = 0.9, bits = 4)
-      .queryExecution.optimizedPlan.toString
-    assert(!cosPlan.contains("Window"))
+  /** Docs and vectors for the LSH pair operators, as parquet (a
+    * LocalRelation would fold the sketch projection away at optimization
+    * time). Reading them runs jobs; building the operators must not. */
+  private def nearDupInputs(): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-near-dup").toString
+    (0 until 12).map(i => (i.toString, s"text body number ${i % 4} with the same words"))
+      .toDF("id", "text").write.parquet(s"$dir/docs")
+    (0L until 12L).map(i => (i, Array.fill(4)((i % 3).toFloat + 1)))
+      .toDF("vec_id", "embedding").write.parquet(s"$dir/vecs")
+    (spark.read.parquet(s"$dir/docs"), spark.read.parquet(s"$dir/vecs"))
+  }
+
+  /** The three LSH pair operators, each with the class of its
+    * per-document sketch expression; `observed` attaches a fresh
+    * `dropObs` to each. */
+  private def nearDupOperators(inputs: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame),
+      observed: Boolean): Seq[(String, org.apache.spark.sql.DataFrame, Class[_])] = {
+    val (docs, vecs) = inputs
+    def dropObs = if (observed) Some(new org.apache.spark.sql.Observation()) else None
+    Seq(
+      ("minhash", MinHashLSH.nearDuplicatePairs(docs, col("id"), col("text"),
+        k = 2, numPerms = 16, bands = 4, dropObs = dropObs),
+        classOf[graft.functions.MinHashSigExpr]),
+      ("simhash", SimHash.nearDuplicatePairs(docs, col("id"), col("text"),
+        dropObs = dropObs), classOf[graft.functions.SimHash64Expr]),
+      ("cosine", graft.similarity.Ann.cosineNearDupPairs(vecs, col("vec_id"),
+        col("embedding"), dim = 4, minCosine = 0.9, bits = 4, dropObs = dropObs),
+        classOf[graft.functions.HyperplaneBucketExpr]))
+  }
+
+  test("bucket-join plan shape: one bucket-key Exchange reused by both join sides, sketch once, no checkpoint") {
+    // the cap's count window shares the self-join's exchange and sort, so
+    // the bucket table is shuffled once and never materialized
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    object Nodes extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def sketches(exprs: Seq[Expression], cls: Class[_]): Int =
+      exprs.map(_.collect { case e if cls.isInstance(e) => e }.size).sum
+    val inputs = nearDupInputs()
+    for (observed <- Seq(false, true)) {
+      for ((name, df, sketch) <- nearDupOperators(inputs, observed)) {
+        df.collect()
+        val optimized = df.queryExecution.optimizedPlan
+        val plan: SparkPlan = df.queryExecution.executedPlan
+        val shuffles = Nodes.collect(plan) { case e: ShuffleExchangeExec => e }
+        assert(shuffles.map(_.outputPartitioning.toString.replaceAll("#\\d+L?", "")) ==
+          Seq("hashpartitioning(band, bucket, 4)"), s"$name: $plan")
+        assert(Nodes.collect(plan) { case r: ReusedExchangeExec => r }.size == 1, s"$name: $plan")
+        assert(Nodes.collect(plan) { case r: RDDScanExec => r }.isEmpty &&
+          optimized.collect { case r: LogicalRDD => r }.isEmpty, s"$name: $plan")
+        assert(optimized.toString.contains("CollectMetrics") == observed, s"$name: $optimized")
+        // one copy per join side in the logical plan (no inferred
+        // generator filter re-evaluating it), one in the executed plan,
+        // where the second side reads the first side's exchange
+        assert(sketches(optimized.collect { case p => p.expressions }.flatten, sketch) == 2,
+          s"$name: $optimized")
+        assert(sketches(Nodes.collect(plan) { case p => p.expressions }.flatten, sketch) == 1,
+          s"$name: $plan")
+      }
+    }
+    // no cap and no dropObs: the window is skipped, the exchange is shared
+    val docs = (0 until 6).map(i => (i.toString, s"same words ${i % 2}")).toDF("id", "text")
+    val uncapped = SimHash.nearDuplicatePairs(docs, col("id"), col("text"),
+      maxBucketSize = Int.MaxValue)
+    uncapped.collect()
+    val plan = uncapped.queryExecution.executedPlan
+    assert(!uncapped.queryExecution.optimizedPlan.toString.contains("Window"))
+    assert(Nodes.collect(plan) { case e: ShuffleExchangeExec => e }.size == 1 &&
+      Nodes.collect(plan) { case r: ReusedExchangeExec => r }.size == 1, plan.toString)
+  }
+
+  test("building a near-dup pair DataFrame runs no Spark job, and evaluating it leaves getPersistentRDDs unchanged") {
+    val sc = spark.sparkContext
+    val group = "near-dup-build"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.add(e.jobId)
+          case Some("near-dup-marker") => marker.countDown()
+          case _ =>
+        }
+    }
+    val inputs = nearDupInputs()
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(listener)
+    val built = try {
+      sc.setJobGroup(group, "build only")
+      val ops = Seq(false, true).flatMap(nearDupOperators(inputs, _)).map(_._2)
+      // listener events arrive in order: once the marker job is seen,
+      // every job started while building has been reported
+      sc.setJobGroup("near-dup-marker", "marker")
+      spark.range(1).collect()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      ops
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(started.isEmpty, s"jobs run while building: $started")
+    built.foreach(_.collect())
+    assert(sc.getPersistentRDDs.keySet == persistedBefore,
+      "evaluating the pairs left persisted (checkpoint) blocks behind")
   }
 
   test("salted text-fetch joins: same pairs as unsalted, hot key spread across salts") {

@@ -839,14 +839,6 @@ object Main {
   private def opt(n: JsonNode, field: String): Option[String] =
     Option(n.get(field)).map(_.asText())
 
-  /** Promote a resumed run's staged output files into `dest` under the
-    * deterministic `part-r<runId>-` prefix. Any files from a crashed
-    * earlier attempt of the SAME run id are deleted first, so the promote
-    * is idempotent regardless of how far the previous attempt got; the
-    * staging dir name starts with '.' so Hadoop input listings never see
-    * in-flight files. Rename is same-filesystem (staging lives inside
-    * dest), i.e. a metadata move, not a copy — on HDFS/local it is atomic
-    * per file. */
   /** Delete promoted `part-r<id>-*` files whose run-id is not in `keep`
     * (the committed run-ids plus the current one) — leftovers of attempts
     * that crashed between promote and ledger-commit. */
@@ -865,6 +857,14 @@ object Main {
     }
   }
 
+  /** Promote a resumed run's staged output files into `dest` under the
+    * deterministic `part-r<runId>-` prefix. Any files from a crashed
+    * earlier attempt of the SAME run id are deleted first, so the promote
+    * is idempotent regardless of how far the previous attempt got; the
+    * staging dir name starts with '.' so Hadoop input listings never see
+    * in-flight files. Rename is same-filesystem (staging lives inside
+    * dest), i.e. a metadata move, not a copy — on HDFS/local it is atomic
+    * per file. */
   private def promoteStaging(spark: SparkSession, staging: String,
       dest: String, runId: String): Unit = {
     import org.apache.hadoop.fs.Path

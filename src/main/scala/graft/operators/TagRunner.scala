@@ -4,7 +4,10 @@ import graft.core.{Attributes, SpanTriple}
 import graft.taggers.TaggerRegistry
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, MapType, StringType, StructField, StructType}
 import org.apache.spark.sql.Row
 
@@ -24,8 +27,8 @@ import org.apache.spark.sql.Row
   */
 object TagRunner {
 
-  /** Set by each tag()/withAttributes() call: accumulator counting the
-    * documents that flowed through that battery. Test hook for
+  /** Set by each [[battery]] pass (tag, withAttributes, a WARC phase):
+    * accumulator counting the documents that flowed through it. Test hook for
     * single-evaluation assertions (task retries can overcount on a real
     * cluster; exact in local mode). */
   @volatile var lastDocsTagged: Option[org.apache.spark.util.LongAccumulator] = None
@@ -47,7 +50,8 @@ object TagRunner {
     StructField("attributes", MapType(StringType, spanTripleType), nullable = false)))
 
   /** Tag `df` (must have `idCol`, `textCol`; metadata columns are passed to
-    * taggers as strings). Returns `(id, attributes)` rows. */
+    * taggers as strings). Returns `(id, attributes)` rows: the [[battery]]
+    * over `select(id, text, meta…)`, projected to [[attrSchema]]. */
   def tag(
       df: DataFrame,
       taggerNames: Seq[String],
@@ -57,33 +61,12 @@ object TagRunner {
       metaCols: Seq[String] = Nil,
       roundScores: Boolean = true,
       taggerModules: Seq[String] = Nil): DataFrame = {
-    val spark = df.sparkSession
-    val cols = (Seq(idCol, textCol) ++ metaCols).map(col)
-    val names = taggerNames // serialize the names, resolve per partition
-    val modules = taggerModules
-    val metaNames = metaCols
-    val round = roundScores
-    val exp = experiment
-
-    val outEnc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(attrSchema)
-    val docCounter = newDocCounter(spark)
-
-    df.select(cols: _*).mapPartitions { rows =>
-      // per-partition tagger instantiation: compiled regexes / model
-      // weights are built once per task, not per row; user modules load
-      // in THIS executor JVM before any name resolves
-      TaggerRegistry.importModules(modules)
-      val taggers = names.map(TaggerRegistry.resolve)
-      rows.map { row =>
-        docCounter.add(1L)
-        val id = row.getString(0)
-        val text = if (row.isNullAt(1)) "" else row.getString(1)
-        val meta = metaNames.zipWithIndex.map { case (m, i) =>
-          m -> (if (row.isNullAt(i + 2)) "" else row.get(i + 2).toString)
-        }.toMap
-        Row(id, tagRow(taggers, text, meta, exp, round))
-      }
-    }(outEnc)
+    // attrSchema's id is a non-null string
+    val id = Bridge.toColumn(AssertNotNull(Bridge.toExpr(col(idCol).cast(StringType))))
+    val in = df.select(id.as("id") +: (textCol +: metaCols).map(col): _*)
+    battery(in, taggerNames.map(_ -> experiment), textCol, metaCols, roundScores,
+      "attributes", taggerModules)
+      .select("id", "attributes")
   }
 
   /** Append the attribute map as a column IN PLACE (no separate attribute
@@ -99,43 +82,54 @@ object TagRunner {
       metaCols: Seq[String] = Nil,
       roundScores: Boolean = true,
       outputCol: String = "attributes",
-      taggerModules: Seq[String] = Nil): DataFrame = {
-    val names = taggerNames
-    val modules = taggerModules
-    val metaNames = metaCols
-    val round = roundScores
-    val exp = experiment
+      taggerModules: Seq[String] = Nil): DataFrame =
+    battery(df, taggerNames.map(_ -> experiment), textCol, metaCols, roundScores,
+      outputCol, taggerModules)
+
+  /** The one tagging pass behind [[tag]], [[withAttributes]] and the WARC
+    * phases: every row of `df` gains `outputCol`, its attribute map, in a
+    * single narrow `mapPartitions`. `pairs` match each tagger name with
+    * the experiment its keys mangle under — one experiment for a
+    * configured run, the tagger's own name for WARC (processor.py:194-197).
+    * Spans of a key emitted twice in one battery are concatenated. */
+  private[graft] def battery(
+      df: DataFrame,
+      pairs: Seq[(String, String)],
+      textCol: String,
+      metaCols: Seq[String],
+      roundScores: Boolean,
+      outputCol: String,
+      taggerModules: Seq[String]): DataFrame = {
     val inputSchema = df.schema
     val textIdx = inputSchema.fieldIndex(textCol)
-    val metaIdx = metaNames.map(inputSchema.fieldIndex)
-    val outSchema = inputSchema.add(StructField(outputCol,
-      MapType(StringType, spanTripleType), nullable = false))
-    val outEnc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
+    val metaIdx = metaCols.map(inputSchema.fieldIndex)
+    val outEnc = RowEncoder.encoderFor(inputSchema.add(StructField(outputCol,
+      MapType(StringType, spanTripleType), nullable = false)))
     val docCounter = newDocCounter(df.sparkSession)
 
     df.mapPartitions { rows =>
-      TaggerRegistry.importModules(modules)
-      val taggers = names.map(TaggerRegistry.resolve)
+      // per-partition tagger instantiation: compiled regexes / model
+      // weights are built once per task, not per row; user modules load
+      // in THIS executor JVM before any name resolves
+      TaggerRegistry.importModules(taggerModules)
+      val taggers = pairs.map { case (t, exp) => (TaggerRegistry.resolve(t), exp) }
       rows.map { row =>
         docCounter.add(1L)
         val text = if (row.isNullAt(textIdx)) "" else row.getString(textIdx)
-        val meta = metaNames.zip(metaIdx).map { case (m, i) =>
+        val meta = metaCols.zip(metaIdx).map { case (m, i) =>
           m -> (if (row.isNullAt(i)) "" else row.get(i).toString)
         }.toMap
-        Row.fromSeq(row.toSeq :+ tagRow(taggers, text, meta, exp, round))
+        Row.fromSeq(row.toSeq :+ tagRow(taggers, text, meta, roundScores))
       }
     }(outEnc)
   }
 
-
   /** One document through the resolved battery: predict, group by span
-    * type, mangle keys, round scores — shared by [[tag]] and
-    * [[withAttributes]] so the two paths can never drift. */
-  private def tagRow(taggers: Seq[graft.taggers.Tagger], text: String,
-      meta: Map[String, String], exp: String,
-      round: Boolean): Map[String, Seq[Row]] = {
+    * type, mangle keys, round scores. */
+  private def tagRow(taggers: Seq[(graft.taggers.Tagger, String)], text: String,
+      meta: Map[String, String], round: Boolean): Map[String, Seq[Row]] = {
     val attrs = scala.collection.mutable.LinkedHashMap.empty[String, Seq[SpanTriple]]
-    taggers.foreach { t =>
+    taggers.foreach { case (t, exp) =>
       t.predict(text, meta).groupBy(_.typ).foreach { case (typ, ss) =>
         val key = Attributes.mangle(exp, t.name, typ)
         val triples = ss.map(s => SpanTriple(s.start, s.end,

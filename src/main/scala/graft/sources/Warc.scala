@@ -311,39 +311,28 @@ object Warc {
       // or target URI are skipped before any tagging.
       .filter(length(col("payload_digest")) > 0 && length(col("warc_url")) > 0)
       .withColumn("text", Linearizer.linearizeCol(col("html")))
-    val pre = preTaggers
-    val post = postTaggers
     // Tagger phases (processor.py:180-197): PRE-taggers run BEFORE
     // linearization, on a doc whose text is still empty — taggers that
     // need the raw markup (cc_re) read it from metadata["html"], so the
     // html rides in the tagger metadata, not as the text. POST-taggers
     // run on the linearized text. Attribute keys mangle each tagger's
     // OWN name as the experiment ({t}__{t}__{attr}, processor.py:194-197),
-    // so taggers run one-at-a-time rather than as a fused battery.
+    // so each phase is one battery pass of (tagger, tagger) pairs. A
+    // tagger listed twice runs once: it would emit the same spans again.
     val tagMeta = Seq("html", "warc_url", "url")
-    def phase(d0: DataFrame, taggers: Seq[String], textCol: String,
+    def phase(d: DataFrame, taggers: Seq[String], textCol: String,
               out: String): DataFrame = {
-      var d = d0
-      val cols = taggers.zipWithIndex.map { case (t, i) =>
-        val c = s"__${out}_$i"
-        d = TagRunner.withAttributes(d, Seq(t), t, textCol = textCol,
-          metaCols = tagMeta, outputCol = c, taggerModules = taggerModules)
-        c
-      }
-      val merged =
-        if (cols.isEmpty) map().cast(MapType(StringType, TagRunner.spanTripleType))
-        else if (cols.size == 1) col(cols.head)
-        // last-wins on duplicate keys (the same tagger in one list):
-        // raw map_concat throws DUPLICATED_MAP_KEY at runtime
-        else cols.map(col).reduce(graft.mixer.Mixer.map_concat_dedup)
-      d.withColumn(out, merged)
-        .withColumn(s"n_$out", size(map_keys(col(out))))
-        .drop(cols: _*)
+      val tagged =
+        if (taggers.isEmpty)
+          d.withColumn(out, map().cast(MapType(StringType, TagRunner.spanTripleType)))
+        else TagRunner.battery(d, taggers.distinct.map(t => t -> t), textCol,
+          tagMeta, roundScores = true, out, taggerModules)
+      tagged.withColumn(s"n_$out", size(map_keys(col(out))))
     }
     val tagged = phase(
       phase(withText.withColumn("__no_text", lit("")),
-        pre, "__no_text", "__pre_attrs"),
-      post, "text", "__post_attrs")
+        preTaggers, "__no_text", "__pre_attrs"),
+      postTaggers, "text", "__post_attrs")
       .withColumnRenamed("n___pre_attrs", "n_pre")
       .withColumnRenamed("n___post_attrs", "n_post")
     val filtered = tagged

@@ -10,17 +10,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * fused tagger battery and mixer predicates run incrementally over a
   * stream of documents, plus watermarked windowed quality metrics.
   *
-  * The batch/stream parity is structural: `tagStream` applies the
-  * identical `TagRunner` mapPartitions operator, so a document scores the
-  * same whether it arrived in a backfill batch or on the stream.
+  * The batch/stream parity is structural: `TagRunner.tag` applies to a
+  * streaming frame unchanged (its battery is a stateless narrow map), so a
+  * document scores the same whether it arrived in a backfill batch or on
+  * the stream.
   */
 object StreamingTagger {
-
-  /** Incrementally tag a document stream (append mode, stateless — the
-    * battery is a narrow map). */
-  def tagStream(docs: DataFrame, taggers: Seq[String], experiment: String,
-      idCol: String = "id", textCol: String = "content"): DataFrame =
-    graft.operators.TagRunner.tag(docs, taggers, experiment, idCol, textCol)
 
   /** Watermarked per-window quality metrics over a timestamped doc
     * stream: doc count, mean text length, and the fraction of docs with

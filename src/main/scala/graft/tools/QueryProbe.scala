@@ -2,7 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev probe: time individual SparkEntry queries.
+/** Dev probe: time individual SparkEntry queries under full evaluation
+  * (a `noop` write of every output column; `count()` would let Catalyst
+  * prune the projections it does not need).
   * Usage: runMain graft.tools.QueryProbe <sfDir> <reps> <query> [query...]
   */
 object QueryProbe {
@@ -25,10 +27,10 @@ object QueryProbe {
       val fn = graft.SparkEntry.queries(name)
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
-      println(f"[probe] $name%-28s min=${times.min}%7.3fs all=${times.map(t => f"$t%.3f").mkString(",")}")
+      println(f"[probe] $name%-28s full evaluation min=${times.min}%7.3fs all=${times.map(t => f"$t%.3f").mkString(",")}")
     }
     spark.stop()
   }

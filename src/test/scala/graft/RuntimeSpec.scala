@@ -249,8 +249,7 @@ class RuntimeSpec extends AnyFunSuite {
       .toDF("id", "content").write.parquet(dir + "/in")
     val schema = spark.read.parquet(dir + "/in").schema
     val stream = spark.readStream.schema(schema).parquet(dir + "/in")
-    val tagged = graft.streaming.StreamingTagger.tagStream(
-      stream, Seq("char_length_v1"), "s")
+    val tagged = TagRunner.tag(stream, Seq("char_length_v1"), "s")
     val q = graft.streaming.StreamingTagger.runAvailableNow(tagged, "tagged_stream")
     q.awaitTermination()
     val out = spark.table("tagged_stream")

@@ -109,6 +109,24 @@ class SparkOpsSpec extends AnyFunSuite {
     assert(mc3.getDouble(2) == 0.58333) // 5-decimal rounding (taggers.py:22)
   }
 
+  test("TagRunner: tag is the withAttributes battery projected to attrSchema") {
+    val df = Seq(
+      ("d1", "Mail a@b.com today.",
+        "<a href=\"https://creativecommons.org/licenses/by/4.0/\">cc</a>"),
+      ("d2", "plain words only", "<p>no license</p>")).toDF("id", "content", "html")
+    val battery = Seq("cc_re", "pii_regex_with_counts_fast_v2", "char_length_v1")
+    val tagged = TagRunner.tag(df, battery, "e", metaCols = Seq("html"))
+    assert(tagged.schema == TagRunner.attrSchema)
+    def attrs(d: org.apache.spark.sql.DataFrame) = d.select("id", "attributes").collect()
+      .map(r => r.getString(0) -> r.getMap[String, Seq[org.apache.spark.sql.Row]](1).toMap)
+      .toMap
+    val inPlace = attrs(TagRunner.withAttributes(df, battery, "e", metaCols = Seq("html")))
+    assert(attrs(tagged) == inPlace)
+    // cc_re read the html from the metadata, not the text
+    assert(inPlace("d1").contains("e__cc_re__cc_by_4_0"))
+    assert(!inPlace("d2").contains("e__cc_re__cc_by_4_0"))
+  }
+
   test("mixer: include/exclude predicate semantics (filters.rs:327-385)") {
     val df = Seq(
       ("keep1", 10.0, 0.1), ("drop_exc", 10.0, 0.9), ("drop_inc", 1.0, 0.1)

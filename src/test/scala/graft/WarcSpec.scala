@@ -176,6 +176,31 @@ class WarcSpec extends AnyFunSuite {
     assert(skipped.count() == 0)
   }
 
+  test("extractDocuments: one battery pass per tagger phase") {
+    val dir = writeFixture(gz = false)
+    val docs = Warc.extractDocuments(Warc.readRecords(spark, dir), "cc-test",
+      preTaggers = Seq("cc_re"),
+      postTaggers = Seq("pii_regex_with_counts_fast_v2", "char_length_v1"))
+    val passes = docs.queryExecution.optimizedPlan.collect {
+      case m: org.apache.spark.sql.catalyst.plans.logical.MapPartitions => m
+    }
+    assert(passes.size == 2, docs.queryExecution.optimizedPlan.toString)
+  }
+
+  test("extractDocuments: a tagger listed twice equals listing it once") {
+    val dir = writeFixture(gz = false)
+    val recs = Warc.readRecords(spark, dir)
+    def extract(post: Seq[String]) =
+      Warc.extractDocuments(recs, "cc-test", postTaggers = post)
+        .orderBy(col("id")).collect().map { r =>
+          (r.getAs[String]("id"), r.getAs[String]("text"),
+            r.getAs[scala.collection.Map[String, Any]]("attributes").toMap)
+        }.toSeq
+    val once = extract(Seq("char_length_v1"))
+    assert(once.forall(_._3.contains("char_length_v1__char_length_v1__length")))
+    assert(extract(Seq("char_length_v1", "char_length_v1")) == once)
+  }
+
   test("extractDocuments: dolma metadata parity (warcinfo stamps, digest id)") {
     val dir = writeFixture(gz = false)
     val recs = Warc.readRecords(spark, dir)

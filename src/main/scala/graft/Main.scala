@@ -1,101 +1,41 @@
 package graft
 
-import graft.mixer.{Mixer, PredicateCompiler}
+import graft.config.{AttrTable, Format, PipelineConfig}
+import graft.dedup.{DistributedBloom, ReferenceDedup}
+import graft.mixer.{Jq, Mixer, PredicateCompiler}
 import graft.operators.TagRunner
 import graft.runtime.{Checkpoint, Metrics}
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** spark-submit entrypoint: runs the tag → dedupe → mix pipeline from a
-  * JSON config (shape mirrors the reference's mixer/tagger configs —
-  * /root/reference/src/shard.rs:533-546 StreamConfig — adapted to tables).
+  * JSON config.
   *
   * {{{
   * spark-submit --class graft.Main dolmaspark.jar -c pipeline.json
   * }}}
   *
-  * Config:
+  * The config's keys, defaults and meanings are documented once, on
+  * [[graft.config.PipelineConfig]]; it is parsed before any Spark job, and
+  * an unknown key at any depth is rejected with the valid keys listed:
   * {{{
-  * {
-  *   "input":   {"format": "parquet|jsonl|table|warc", "path": "...", "id": "id", "text": "content"},
-  *   // "id"/"text" accept nested dot-paths ("metadata.text"), matching
-  *   // the reference's nested field retrievers (tokenizer/tokenizer.py
-  *   // make_retriever_for_field, tests/python/test_nested_struct.py).
-  *   // A dot-path is EXTRACTED (the parent struct stays on the doc);
-  *   // a plain name is renamed.
-  *   // "warc" runs the reference's `dolma warc` extraction in-pipeline
-  *   // (warc/processor.py): records -> linearized dolma documents.
-  *   // Extra input fields: "source_name", "pre_taggers" (on raw html),
-  *   // "post_taggers" (on linearized text), "skip_no_pre_taggers",
-  *   // "skip_no_post_taggers", "store_html_in_metadata".
-  *   "taggers": ["gopher_v2", "pii_regex_with_counts_fast_v2"],
-  *   "tagger_modules": ["com.example.MyTaggers"],  // optional: custom
-  *               // tagger classes/objects on the --jars classpath
-  *               // (reference `taggers_modules` / import_modules)
-  *   "experiment": "exp",
-  *   "dedupe":  {"enabled": true,
-  *               "mode": "documents|paragraphs|ngrams|bloom|bloom_paragraphs",
-  *               "attribute_name": "duplicate_paragraphs",
-  *               "ngram": {"length": 8, "stride": 0, "threshold": 0.7},
-  *               "bloom_filter": {           // optional: cross-run state
-  *                 // (the reference deduper's Bloom file) — marks docs
-  *                 // whose key is already in PERSISTED state and, unless
-  *                 // read_only, merges this run's keys into a new state
-  *                 // version under "path". mode "bloom" = Bloom only.
-  *                 // mode "bloom_paragraphs" = PARAGRAPH grain: hits
-  *                 // become exact paragraph spans for scrubbing.
-  *                 "path": "...", "read_only": false, "shards": 64,
-  *                 "estimated_doc_count": 1000000,
-  *                 "desired_false_positive_rate": 1e-4,
-  *                 "key": "content_sha|id",   // doc grain only
-  *                 "skip_empty": false,       // paragraph grain only
-  *                 "attribute_name": "bff_duplicate"}},
-  *   "filter":  {"include": [], "exclude": ["$.attributes.exp__...[0][2] > 0.5"]},
-  *   "span_replacement": [{"span": "exp__...__EMAIL_ADDRESS", "min_score": 0.5,
-  *                         "replacement": "[EMAIL]"}],
-  *   "min_text_length": 1,
-  *   "output":  {"path": "...", "format": "parquet|jsonl|table",
-  *               "compression": "gzip",        // write codec
-  *               "max_records_per_file": 0,    // shard sizing (the
-  *               // reference's max_size_in_bytes ÷ expected doc size)
-  *               "discard_fields": ["field"]}, // dropped from output docs
-  *   "tokens":  {"enabled": true, "destination": "...",   // optional: the
-  *               // `dolma tokens` stage over the mixed output — binary
-  *               // shards + metadata table under destination/
-  *               "tokenizer": {"path": "tokenizer.json",  // HF format;
-  *                             // omitted -> hashed-vocab ids
-  *                             "bos_token_id": null, "eos_token_id": 2,
-  *                             "segment_before_tokenization": false},
-  *               "bytes_per_token": 2, "num_shards": 0,
-  *               "target_tokens_per_shard": 536870912,
-  *               "min_shard_size_bytes": 0,    // >0 -> reshard pass
-  *               "dolma_layout": false},       // .npy + .csv.gz export
-  *   "analyze":  {"enabled": true,           // optional: the
-  *               // `dolma analyze` stage — per-attribute score/length
-  *               // distributions as equal-count summaries + the console
-  *               // report (core/analyzer.py)
-  *               "attributes": ["path", ...], // default: this run's attrs
-  *               "bins": 1000, "viz_bins": 10, "regex": null,
-  *               "total": false,
-  *               "summaries_output": "...",   // parquet (name,bins,counts,total,sum)
-  *               "report": "..."},            // rendered text; omit -> stdout
-  *   "attributes_output": "...",   // optional
-  *   "attributes_input": ["path", {"path": "...", "format": "jsonl"}],
-  *               // optional: merge attribute tables written by EARLIER
-  *               // tag runs (the reference's split tag-then-mix
-  *               // workflow); later entries win on duplicate keys
-  *   "metrics_output": "...",      // optional: lineage + rule metrics
-  *   "ledger": "..."               // optional: resume checkpoint
-  * }
+  * {"input":  {"format": "parquet", "path": "...", "id": "id", "text": "content"},
+  *  "taggers": ["gopher_v2", "pii_regex_with_counts_fast_v2"],
+  *  "dedupe": {"mode": "documents"},
+  *  "filter": {"exclude": ["$.attributes.exp__gopher_v2__word_count[0][2] < 50"]},
+  *  "span_replacement": [{"span": "exp__pii_regex_with_counts_fast_v2__EMAIL_ADDRESS",
+  *                        "min_score": 0.5, "replacement": "[EMAIL]"}],
+  *  "output": {"path": "...", "format": "parquet"}}
   * }}}
   *
   * A top-level `{"streams": [cfg, cfg, ...]}` runs each stream config in
   * sequence (the reference mixer's multi-stream YAML,
-  * src/shard.rs:533-546).
+  * src/shard.rs:533-546); every stream's config is parsed before the first
+  * one runs.
   *
   * Resume semantics: with a `ledger`, completed input files are skipped
   * and their output is left untouched; a resumed run appends only the
@@ -123,71 +63,46 @@ import scala.jdk.CollectionConverters._
   * `localCheckpoint`, and summaries and report are emitted after the
   * write. Metrics, lineage and the tokens stage read back the written
   * files. `attributes_output` adds one write of the attribute table,
-  * which the mix then joins back. Unknown top-level keys are rejected
-  * before any Spark job.
+  * which the mix then joins back.
   */
 object Main {
 
   def main(args: Array[String]): Unit = {
     val configPath = args.sliding(2).collectFirst { case Array("-c", p) => p }
       .getOrElse(sys.error("usage: graft.Main -c <config.json>"))
-    val cfg = new ObjectMapper().readTree(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(configPath)))
+    val configs = PipelineConfig.parseAll(new ObjectMapper().readTree(
+      java.nio.file.Files.readString(java.nio.file.Paths.get(configPath))))
 
     val spark = SparkSession.builder()
       .appName("graft-pipeline")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
-    try {
-      Option(cfg.get("streams")) match {
-        case Some(streams) => streams.elements().asScala.foreach(run(spark, _))
-        case None => run(spark, cfg)
-      }
-    } finally spark.stop()
+    try configs.foreach(run(spark, _))
+    finally spark.stop()
   }
 
-  /** The top-level keys [[run]] reads (the scaladoc's config shape). */
-  val ConfigKeys: Seq[String] = Seq("input", "taggers", "tagger_modules",
-    "experiment", "dedupe", "filter", "span_replacement", "min_text_length",
-    "output", "tokens", "analyze", "attributes_output", "attributes_input",
-    "metrics_output", "ledger")
+  /** Parse `cfg` ([[PipelineConfig.parse]]: a misspelt key fails here,
+    * before any Spark job) and run it. */
+  def run(spark: SparkSession, cfg: JsonNode): Unit = run(spark, PipelineConfig.parse(cfg))
 
-  def run(spark: SparkSession, cfg: JsonNode): Unit = {
-    // a misspelt key ("taggerz") would otherwise silently switch a stage
-    // off: reject it before any Spark job
-    val unknown = cfg.fieldNames().asScala.filterNot(ConfigKeys.contains).toSeq
-    require(unknown.isEmpty,
-      s"unknown config key(s) ${unknown.mkString("\"", "\", \"", "\"")}; " +
-        s"valid keys: ${ConfigKeys.mkString(", ")}")
-    val input = cfg.get("input")
-    val idColName = opt(input, "id").getOrElse("id")
-    val textColName = opt(input, "text").getOrElse("content")
-    val inFormat = opt(input, "format").getOrElse("parquet")
-    val isWarc = inFormat == "warc"
-    val raw0 = inFormat match {
-      case "jsonl" => graft.sources.Jsonl.readDocuments(spark, input.get("path").asText())
-      case "table" => spark.read.table(input.get("path").asText())
-      case "warc" => graft.sources.Warc.readRecords(spark, input.get("path").asText())
-      case _ => spark.read.parquet(input.get("path").asText())
-    }
+  /** Run one parsed pipeline config. */
+  def run(spark: SparkSession, c: PipelineConfig): Unit = {
+    val in = c.input
+    val isWarc = in.format == Format.Warc
+    val raw0 = read(spark, in.format, Seq(in.path))
 
     // file-grain resume (same unit as the reference's skip-if-exists
     // done-markers, core/parallel.py:229-231): diff the driver-side file
     // listing against the ledger and re-read only the pending files. The
     // ledger stays O(input files) — never O(documents) — and a resumed
     // run does zero I/O on completed shards.
-    val ledger = Option(cfg.get("ledger")).map(n => Checkpoint(spark, n.asText()))
-    require(ledger.isEmpty || inFormat != "table",
-      "file-grain ledger resume does not compose with table input: the " +
-        "catalog's snapshot isolation owns membership — pin a snapshot " +
-        "in the catalog instead (see Main scaladoc)")
+    val ledger = c.ledger.map(Checkpoint(spark, _))
     val allFiles =
-      if (inFormat == "table") Seq.empty[String]
+      if (in.format == Format.Table) Seq.empty[String]
       // the WARC frame is RDD-backed (binaryFiles) — list the archive
       // names without reading them (PortableDataStream keys are lazy)
-      else if (isWarc) spark.sparkContext
-        .binaryFiles(input.get("path").asText()).map(_._1).collect().toSeq.sorted
+      else if (isWarc) spark.sparkContext.binaryFiles(in.path).map(_._1).collect().toSeq.sorted
       else raw0.inputFiles.toSeq.sorted
     val doneKeys = ledger.map(_.completedKeySet()).getOrElse(Set.empty[String])
     val pendingFiles = allFiles.filterNot(doneKeys)
@@ -227,54 +142,33 @@ object Main {
     }
     // Write helper: direct write when not resuming (Overwrite retries are
     // naturally idempotent); staging + promote when resuming.
-    def writeCommitted(write: (String, org.apache.spark.sql.SaveMode) => Unit,
-        dest: String): Unit =
-      if (!resuming) write(dest, org.apache.spark.sql.SaveMode.Overwrite)
+    def writeCommitted(write: (String, SaveMode) => Unit, dest: String): Unit =
+      if (!resuming) write(dest, SaveMode.Overwrite)
       else {
         sweepOrphanRuns(spark, dest, committedRuns + runId)
         val staging = s"$dest/.staging-$runId"
-        write(staging, org.apache.spark.sql.SaveMode.Overwrite)
+        write(staging, SaveMode.Overwrite)
         promoteStaging(spark, staging, dest, runId)
       }
     val raw =
       if (pendingFiles.size == allFiles.size) raw0
-      else if (isWarc)
-        graft.sources.Warc.readRecords(spark, pendingFiles.mkString(","))
-      else {
-        val rd = spark.read.schema(raw0.schema)
-        if (inFormat == "jsonl") rd.json(pendingFiles: _*)
-        else rd.parquet(pendingFiles: _*)
-      }
+      else read(spark, in.format, pendingFiles, Some(raw0.schema))
 
     // "warc" input runs the reference's `dolma warc` extraction
     // (warc/processor.py) INSIDE the pipeline: records → linearized dolma
     // documents, with the warc-specific pre/post taggers from the input
     // config; the extracted attributes ride along as a column (no extra
     // join) and merge with the pipeline's own tagger output below.
-    def strList(n: JsonNode, f: String): Seq[String] =
-      Option(n.get(f)).map(_.elements().asScala.map(_.asText()).toSeq)
-        .getOrElse(Seq.empty)
-    def flag(n: JsonNode, f: String): Boolean =
-      Option(n.get(f)).exists(_.asBoolean(false))
-    // "tagger_modules" mirrors the reference's `taggers_modules` config
-    // (cli/tagger.py + core/utils.py import_modules): fully-qualified
-    // class/object names that register custom taggers — imported on the
-    // driver for fail-fast name resolution AND threaded into every
-    // tagging task so executor JVMs import them before resolving.
-    val taggerModules = Option(cfg.get("tagger_modules"))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-    graft.taggers.TaggerRegistry.importModules(taggerModules)
+    // Custom tagger modules are imported on the driver for fail-fast name
+    // resolution AND threaded into every tagging task so executor JVMs
+    // import them before resolving.
+    graft.taggers.TaggerRegistry.importModules(c.taggerModules)
     val docs =
       if (isWarc) {
-        graft.sources.Warc.extractDocuments(raw,
-          opt(input, "source_name").getOrElse("warc"),
-          preTaggers = strList(input, "pre_taggers"),
-          postTaggers = strList(input, "post_taggers"),
-          skipNoPreTaggers = flag(input, "skip_no_pre_taggers"),
-          skipNoPostTaggers = flag(input, "skip_no_post_taggers"),
-          storeHtml = flag(input, "store_html_in_metadata"),
-          keepWarcFile = true,
-          taggerModules = taggerModules)
+        graft.sources.Warc.extractDocuments(raw, in.sourceName, in.preTaggers,
+          in.postTaggers, in.skipNoPreTaggers, in.skipNoPostTaggers,
+          storeHtml = in.storeHtmlInMetadata, keepWarcFile = true,
+          taggerModules = c.taggerModules)
           .withColumnRenamed("text", "content")
           .withColumnRenamed("attributes", "__warc_attrs")
           .withColumnRenamed("__warc_file", "__file")
@@ -288,7 +182,7 @@ object Main {
           if (src == dst) df
           else if (src.contains('.')) df.withColumn(dst, col(src))
           else df.withColumnRenamed(src, dst)
-        bind(bind(raw, idColName, "id"), textColName, "content")
+        bind(bind(raw, in.id, "id"), in.text, "content")
         // ids are strings in the dolma document model; coerce numeric ids
         .withColumn("id", col("id").cast("string"))
         // capture provenance columns at scan time — after joins the scan
@@ -304,70 +198,39 @@ object Main {
     // write-then-merge path — the only way to produce that table: the
     // table is written ONCE and merged back from the written files, so the
     // battery still never evaluates twice.
-    val taggers = Option(cfg.get("taggers")).map(_.elements().asScala.map(_.asText()).toSeq)
-      .getOrElse(Seq.empty)
-    val experiment = opt(cfg, "experiment").getOrElse("exp")
-    val attributesOut = opt(cfg, "attributes_output").filter(_ => taggers.nonEmpty)
+    val attributesOut = c.attributesOutput.filter(_ => c.taggers.nonEmpty)
     val tagged =
-      if (taggers.isEmpty || attributesOut.isDefined) docs
-      else TagRunner.withAttributes(docs, taggers, experiment,
-        outputCol = "__tag_attrs", taggerModules = taggerModules)
+      if (c.taggers.isEmpty || attributesOut.isDefined) docs
+      else TagRunner.withAttributes(docs, c.taggers, c.experiment,
+        outputCol = "__tag_attrs", taggerModules = c.taggerModules)
     val attrsWritten = attributesOut.map { p =>
       writeCommitted((path, mode) =>
-        TagRunner.tag(docs, taggers, experiment, taggerModules = taggerModules)
+        TagRunner.tag(docs, c.taggers, c.experiment, taggerModules = c.taggerModules)
           .write.mode(mode).parquet(path), p)
       // merge only THIS run's attribute rows (the pending files' docs); on
       // resume the attrs table also holds prior runs' rows
-      val all = spark.read.parquet(p)
+      val all = read(spark, Format.Parquet, Seq(p))
       if (resuming) all.join(docs.select(col("id")), Seq("id"), "left_semi")
       else all
     }
 
     // pre-existing attribute tables — the reference's SPLIT workflow
     // (`dolma tag` writes attribute files, a later `dolma mix` run joins
-    // them back by id, src/shard.rs:288-365): each "attributes_input"
-    // entry is a path string (format inferred from the extension) or
-    // {"path", "format": "parquet|jsonl|table"}. jsonl reads the dolma
+    // them back by id, src/shard.rs:288-365). jsonl reads the dolma
     // triple format; parquet reads this engine's attributes_output.
     // Merge order mirrors the reference (later files win on duplicate
     // keys, shard.rs:322): loaded tables first, then this run's taggers.
-    // shared by attributes_input and the analyze stage's "attributes"
-    def readAttrTable(n: JsonNode): DataFrame = {
-      val (path, fmt) =
-        if (n.isTextual) {
-          val p = n.asText()
-          val f = if (p.matches(".*\\.jsonl?(\\.(gz|zst|zstd))?$")) "jsonl"
-                  else "parquet"
-          (p, f)
-        } else (n.get("path").asText(),
-          Option(n.get("format")).map(_.asText()).getOrElse("parquet"))
-      fmt match {
-        case "jsonl" => graft.sources.Jsonl.readAttributes(spark, path)
-        case "table" => spark.read.table(path)
-        case _ => spark.read.parquet(path)
-      }
-    }
-    val attrsLoaded = Option(cfg.get("attributes_input"))
-      .map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
-      .map(readAttrTable)
+    def readAttrs(t: AttrTable): DataFrame = read(spark, t.format, Seq(t.path), attributes = true)
+    val attrsLoaded = c.attributesInput.map(readAttrs)
 
     // dedupe: "documents" (exact first-occurrence flag), or the dolma
     // attribute-emitting modes "paragraphs" / "ngrams" whose duplicate
     // spans flow into the mixer like any other attribute (drop them with
     // a span_replacement rule — the reference's dedupe->mix pipeline)
-    val dedupeNode = Option(cfg.get("dedupe"))
-    val dedupEnabled = dedupeNode.exists(d =>
-      Option(d.get("enabled")).forall(_.asBoolean(true)))
-    val dedupMode = dedupeNode.flatMap(d => Option(d.get("mode")).map(_.asText()))
-      .getOrElse("documents")
-    val dedupAttrName = dedupeNode.flatMap(d =>
-      Option(d.get("attribute_name")).map(_.asText()))
-      .getOrElse("duplicate_paragraphs")
-
+    val dedupe = c.dedupe.filter(_.enabled)
+    val docDedup = dedupe.exists(_.mode == "documents")
     val dedupAttr: Option[DataFrame] =
-      if (!dedupEnabled || dedupMode == "documents" ||
-        dedupMode.startsWith("bloom")) None
-      else {
+      dedupe.filter(d => d.mode == "paragraphs" || d.mode == "ngrams").map { d =>
         // these modes mark LATER occurrences (first copy stays intact),
         // so on WARC inputs — where byte-identical captures share a
         // digest id — the spans must be keyed per document INSTANCE
@@ -378,23 +241,14 @@ object Main {
         val dedupKey = if (isWarc) col("__ord").cast("string") else col("id")
         // null text (nullable in dolma jsonl) dedups like the empty string
         val safeText = coalesce(col("content"), lit(""))
-        val spansDf = dedupMode match {
-          case "paragraphs" =>
-            graft.dedup.ReferenceDedup.paragraphDupSpans(
-              docs, dedupKey, safeText, col("__ord"))
-          case "ngrams" =>
-            val ng = dedupeNode.flatMap(d => Option(d.get("ngram")))
-            graft.dedup.ReferenceDedup.ngramDupSpans(
-              docs, dedupKey, safeText, col("__ord"),
-              ngramLength = ng.flatMap(n => Option(n.get("length")).map(_.asInt())).getOrElse(8),
-              stride = ng.flatMap(n => Option(n.get("stride")).map(_.asInt())).getOrElse(0),
-              overlapThreshold = ng.flatMap(n => Option(n.get("threshold")).map(_.asDouble())).getOrElse(0.7))
-          case other => sys.error(s"unknown dedupe mode: $other")
-        }
+        val spansDf =
+          if (d.mode == "paragraphs")
+            ReferenceDedup.paragraphDupSpans(docs, dedupKey, safeText, col("__ord"))
+          else ReferenceDedup.ngramDupSpans(docs, dedupKey, safeText, col("__ord"),
+            d.ngram.length, d.ngram.stride, d.ngram.threshold)
         // an in-flight analyze rides the output write (see below), so
         // these spans are computed once, inside that write
-        Some(spansDf.select(col("id"),
-          map(lit(dedupAttrName), col("spans")).as("attributes")))
+        spansDf.select(col("id"), map(lit(d.attributeName), col("spans")).as("attributes"))
       }
 
     // cross-run Bloom dedup state — the reference deduper's Bloom-filter
@@ -407,33 +261,15 @@ object Main {
     // two extra passes over the docs — run Bloom dedupe as its own config
     // (the reference's `dolma dedupe` is its own CLI step for the same
     // reason).
-    require(!dedupEnabled || !dedupMode.startsWith("bloom") ||
-      dedupeNode.exists(d => d.has("bloom_filter")),
-      s"""dedupe mode "$dedupMode" requires a "bloom_filter" block""")
     val (bloomAttr: Option[DataFrame], bloomCommit: Option[() => Unit]) =
-      dedupeNode.filter(_ => dedupEnabled)
-        .flatMap(d => Option(d.get("bloom_filter"))).map { b =>
+      dedupe.flatMap(_.bloomFilter).map { b =>
       import spark.implicits._
-      val statePath = b.get("path").asText()
-      val cfgShards = Option(b.get("shards")).map(_.asInt()).getOrElse(64)
-      val est = Option(b.get("estimated_doc_count")).map(_.asLong()).getOrElse(1000000L)
-      val fp = Option(b.get("desired_false_positive_rate")).map(_.asDouble()).getOrElse(1e-4)
-      val readOnly = Option(b.get("read_only")).exists(_.asBoolean(false))
-      val bloomAttrName = Option(b.get("attribute_name")).map(_.asText())
-        .getOrElse("bff_duplicate")
-      // "bloom_paragraphs" works at PARAGRAPH grain (the reference
-      // deduper's primary production mode: paragraphs probed against the
-      // BFF across the whole corpus) — hits become exact paragraph spans,
-      // ready for span_replacement scrubbing. "bloom" / "documents" work
-      // at doc grain on the configured key.
-      val paragraphGrain = dedupMode == "bloom_paragraphs"
-      val skipEmpty = Option(b.get("skip_empty")).exists(_.asBoolean(false))
-      val existing = graft.dedup.DistributedBloom.loadState(spark, statePath)
-      val stShards = existing.map(_._2).getOrElse(cfgShards)
-      def probeHits(keys: org.apache.spark.sql.Dataset[(String, String)]) =
+      val existing = DistributedBloom.loadState(spark, b.path)
+      val stShards = existing.map(_._2).getOrElse(b.shards)
+      def probeHits(keys: Dataset[(String, String)]) =
         existing match {
           case Some((st, _)) =>
-            graft.dedup.DistributedBloom.probeSharded(keys, st, stShards)
+            DistributedBloom.probeSharded(keys, st, stShards)
               .toDF("id", "__hit").filter(col("__hit")).select(col("id"))
           case None => spark.emptyDataset[String].toDF("id")
         }
@@ -441,19 +277,24 @@ object Main {
       // executes the returned thunk): saving eagerly would poison the
       // state if the run later failed — a retry would then see its own
       // keys as duplicates and silently drop the whole batch.
-      def deferredUpdate(keys: () => org.apache.spark.sql.Dataset[String]): Option[() => Unit] =
-        if (readOnly) None
+      def deferredUpdate(keys: () => Dataset[String]): Option[() => Unit] =
+        if (b.readOnly) None
         else Some { () =>
-          val fresh = graft.dedup.DistributedBloom.buildSharded(
-            keys(), est, fp, stShards)
+          val fresh = DistributedBloom.buildSharded(
+            keys(), b.estimatedDocCount, b.desiredFalsePositiveRate, stShards)
           val merged = existing match {
-            case Some((st, _)) => graft.dedup.DistributedBloom.mergeStates(st, fresh)
+            case Some((st, _)) => DistributedBloom.mergeStates(st, fresh)
             case None => fresh
           }
-          graft.dedup.DistributedBloom.saveState(merged, statePath, stShards)
+          DistributedBloom.saveState(merged, b.path, stShards)
           ()
         }
-      if (paragraphGrain) {
+      // "bloom_paragraphs" works at PARAGRAPH grain (the reference
+      // deduper's primary production mode: paragraphs probed against the
+      // BFF across the whole corpus) — hits become exact paragraph spans,
+      // ready for span_replacement scrubbing. "bloom" / "documents" work
+      // at doc grain on the configured key.
+      if (dedupe.exists(_.mode == "bloom_paragraphs")) {
         // one paragraph walk feeds BOTH the probe and the state update:
         // checkpoint keys+offsets (16-byte hashes, no text) so the doc
         // pipeline upstream evaluates once
@@ -461,9 +302,9 @@ object Main {
         // doc ids (warc digests) keep ONE row per (id, idx) — dedup
         // before the probe join or k copies would pack k² identical
         // triples into the span arrays
-        val paras0 = graft.dedup.ReferenceDedup.paragraphKeyRows(
+        val paras0 = ReferenceDedup.paragraphKeyRows(
           docs, col("id"), coalesce(col("content"), lit("")))
-        val paras = (if (skipEmpty) paras0.filter(!col("is_empty")) else paras0)
+        val paras = (if (b.skipEmpty) paras0.filter(!col("is_empty")) else paras0)
           .withColumn("__pid", concat_ws("\u0000", col("id"), col("idx")))
           .dropDuplicates("__pid")
           .localCheckpoint()
@@ -478,24 +319,19 @@ object Main {
           .agg(array_sort(collect_list(
             struct(col("idx"), col("start"), col("end"), lit(1.0).as("score"))))
             .as("__sorted"))
-          .select(col("id"), map(lit(bloomAttrName),
+          .select(col("id"), map(lit(b.attributeName),
             transform(col("__sorted"), s => struct(
               s.getField("start").as("start"), s.getField("end").as("end"),
               s.getField("score").as("score")))).as("attributes"))
         (Some(attr), deferredUpdate(() => paras.select(col("key")).as[String]))
       } else {
-        val keyCol = Option(b.get("key")).map(_.asText()) match {
-          case Some("id") => col("id")
-          case Some("content_sha") | None => sha2(col("content"), 256)
-          case Some(other) => sys.error(
-            s"""unknown bloom_filter key "$other" (expected "content_sha" or "id")""")
-        }
+        val keyCol = if (b.key == "id") col("id") else sha2(col("content"), 256)
         val keys = docs.select(col("id").cast("string"), keyCol.cast("string"))
           .as[(String, String)]
         val hits = probeHits(keys)
         val attr = hits.join(docs.select(col("id"),
             length(col("content")).cast("long").as("__len")), Seq("id"))
-          .select(col("id"), map(lit(bloomAttrName),
+          .select(col("id"), map(lit(b.attributeName),
             array(struct(lit(0L).as("start"), col("__len").as("end"),
               lit(1.0).as("score")))).as("attributes"))
         (Some(attr), deferredUpdate(() => keys.map(_._2)))
@@ -545,7 +381,7 @@ object Main {
     // fold the WARC extraction's own attributes in (they were computed in
     // the same scan; the pipeline's own maps win on duplicate keys)
     if (isWarc) withAttrs = foldAttrs(withAttrs, "__warc_attrs", cWins = false)
-    if (dedupEnabled && dedupMode == "documents") {
+    if (docDedup) {
       // null text keys like the empty string: sha2(null) is null, and a
       // null window key would silently group every null-content doc into
       // one duplicate cluster
@@ -563,23 +399,20 @@ object Main {
     // (Dataset.observe): per-task tracker maps merge on the driver, so the
     // pipeline evaluates once and nothing is pinned. Summaries and report
     // are emitted after the write.
-    val analyzeNode = Option(cfg.get("analyze"))
-      .filter(a => Option(a.get("enabled")).forall(_.asBoolean(true)))
-    val analyzeSummaries = analyzeNode.map { a =>
+    val analyze = c.analyze.filter(_.enabled)
+    val analyzeSummaries = analyze.map { a =>
       val summaries = graft.functions.Binning.attributeSummaries(col("attributes"),
-        nOut = Option(a.get("bins")).map(_.asInt()).getOrElse(1000),
-        regex = opt(a, "regex")).as("summaries")
-      Option(a.get("attributes")) match {
-        case Some(list) => () =>
-          list.elements().asScala.toSeq.map(t => readAttrTable(t).select(col("attributes")))
-            .reduce(_ unionAll _).agg(summaries).head().getSeq[Row](0)
-        case None =>
-          require(withAttrs.columns.contains("attributes"),
-            "analyze: no \"attributes\" tables given and this run has no " +
-              "taggers/dedupe/attributes_input to analyze")
-          val obs = new org.apache.spark.sql.Observation()
-          withAttrs = withAttrs.observe(obs, summaries)
-          () => obs.get("summaries").asInstanceOf[Seq[Row]]
+        nOut = a.bins, regex = a.regex).as("summaries")
+      if (a.attributes.nonEmpty) () =>
+        a.attributes.map(t => readAttrs(t).select(col("attributes")))
+          .reduce(_ unionAll _).agg(summaries).head().getSeq[Row](0)
+      else {
+        require(withAttrs.columns.contains("attributes"),
+          "analyze: no \"attributes\" tables given and this run has no " +
+            "taggers/dedupe/attributes_input to analyze")
+        val obs = new Observation()
+        withAttrs = withAttrs.observe(obs, summaries)
+        () => obs.get("summaries").asInstanceOf[Seq[Row]]
       }
     }
 
@@ -587,82 +420,46 @@ object Main {
     // `"syntax": "jq"` (or a jq-looking string the grammar rejects) routes
     // through the generic graft.mixer.Jq interpreter fallback
     // (reference: src/filters.rs:250-385 + SpanReplacementConfig.syntax).
-    val filterNode = Option(cfg.get("filter"))
-    val filterSyntax = filterNode.flatMap(f => Option(f.get("syntax")).map(_.asText()))
-      .getOrElse("jsonpath")
-    def preds(kind: String): Seq[org.apache.spark.sql.Column] =
-      filterNode.flatMap(f => Option(f.get(kind))).map(_.elements().asScala.map { n =>
-        val s = n.asText()
-        // expose the REST of the document shape (source, metadata, created,
-        // added — whichever the input schema actually has) so fallback jq
-        // predicates like `.source == "cc"` evaluate against real values
-        def jqExtra: Seq[(String, org.apache.spark.sql.Column)] = {
-          val present = withAttrs.columns.toSet
-          Seq("source", "metadata", "created", "added")
-            .filter(present.contains).map(c => c -> col(c))
-        }
-        def jqCol() =
-          if (kind == "exclude")
-            graft.mixer.Jq.excludeColumn(s, col("attributes"), col("id"), col("content"), jqExtra)
-          else
-            graft.mixer.Jq.includeColumn(s, col("attributes"), col("id"), col("content"), jqExtra)
-        if (s == "is_duplicate") col("is_duplicate")
-        else if (filterSyntax == "jq") jqCol()
-        else
-          try PredicateCompiler.compile(s)
-          catch { case e: Exception if s.startsWith(".") => jqCol() }
-      }.toSeq).getOrElse(Seq.empty)
-    val docDedup = dedupEnabled && dedupMode == "documents"
-    val exclude = preds("exclude") ++ (if (docDedup) Seq(col("is_duplicate")) else Nil)
-
+    def preds(rules: Seq[String], exclude: Boolean): Seq[Column] = rules.map { s =>
+      // expose the REST of the document shape (source, metadata, created,
+      // added — whichever the input schema actually has) so fallback jq
+      // predicates like `.source == "cc"` evaluate against real values
+      def jqExtra: Seq[(String, Column)] = {
+        val present = withAttrs.columns.toSet
+        Seq("source", "metadata", "created", "added")
+          .filter(present.contains).map(c => c -> col(c))
+      }
+      def jqCol() = (if (exclude) Jq.excludeColumn _ else Jq.includeColumn _)(
+        s, col("attributes"), col("id"), col("content"), jqExtra)
+      if (s == "is_duplicate") col("is_duplicate")
+      else if (c.filter.syntax == "jq") jqCol()
+      else try PredicateCompiler.compile(s)
+      catch { case e: Exception if s.startsWith(".") => jqCol() }
+    }
     // span selectors: jsonpath "$.attributes.NAME" or (syntax: jq) the
     // optional-path form ".attributes?.NAME?" — both resolve to the flat
-    // attribute key of this engine's attribute maps
-    val SimpleJqAttr = """^\.attributes\??\.([A-Za-z0-9_]+)\??$""".r
-    val replacements = Option(cfg.get("span_replacement")).map(_.elements().asScala.map { r =>
-      val rawSpan = r.get("span").asText()
-      val spanName = Option(r.get("syntax")).map(_.asText()) match {
-        case Some("jq") => rawSpan match {
-          case SimpleJqAttr(name) => name
-          case other => sys.error(
-            s"jq span selector '$other' is not a flat attribute path; " +
-              "this engine's attribute maps are keyed exp__tagger__type")
-        }
-        case _ => rawSpan
-      }
-      Mixer.SpanReplacementRule(
-        spanName,
-        Option(r.get("min_score")).map(_.asDouble()).getOrElse(Double.NegativeInfinity),
-        Option(r.get("max_score")).map(_.asDouble()).getOrElse(Double.PositiveInfinity),
-        Option(r.get("replacement")).map(_.asText()).getOrElse(""))
-    }.toSeq).getOrElse(Seq.empty)
-
-    // output.discard_fields (reference cli/mixer.py:179-182 /
-    // shard.rs:446-448): user-configured fields dropped from the output
-    // document, on top of the engine's own is_duplicate flag
-    val userDiscard = Option(cfg.get("output"))
-      .flatMap(o => Option(o.get("discard_fields")))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
+    // attribute key of this engine's attribute maps. output.discard_fields
+    // (reference cli/mixer.py:179-182 / shard.rs:446-448) are dropped from
+    // the output document, on top of the engine's own is_duplicate flag.
+    val out = c.output
     val mixCfg = Mixer.MixerConfig(
-      include = preds("include"),
-      exclude = exclude,
-      spanReplacements = replacements,
-      discardFields = Seq("is_duplicate") ++ userDiscard,
-      minTextLength = Option(cfg.get("min_text_length")).map(_.asInt()).getOrElse(0))
+      include = preds(c.filter.include, exclude = false),
+      exclude = preds(c.filter.exclude, exclude = true) ++
+        (if (docDedup) Seq(col("is_duplicate")) else Nil),
+      spanReplacements = c.spanReplacement.map(r => Mixer.SpanReplacementRule(
+        r.attribute, r.minScore, r.maxScore, r.replacement)),
+      discardFields = "is_duplicate" +: out.discardFields,
+      minTextLength = c.minTextLength)
 
     // decision metrics ride the output write as a CollectMetrics node
     // (Dataset.observe): zero extra evaluations of the pipeline
-    val metricsOut = Option(cfg.get("metrics_output")).map(_.asText())
-    val ruleNames = "total" +:
-      (if (docDedup) Seq("dropped_duplicate") else Seq.empty)
-    val rulesObs = new org.apache.spark.sql.Observation()
-    if (metricsOut.isDefined) {
-      val aggs = Metrics.ruleMetricExprs(
-        if (docDedup) Seq("dropped_duplicate" -> col("is_duplicate"))
-        else Seq.empty)
+    val rules = if (docDedup) Seq("dropped_duplicate" -> col("is_duplicate")) else Nil
+    val rulesObs = new Observation()
+    if (c.metricsOutput.isDefined) {
+      val aggs = Metrics.ruleMetricExprs(rules)
       withAttrs = withAttrs.observe(rulesObs, aggs.head, aggs.tail: _*)
     }
-    val rowsObs = new org.apache.spark.sql.Observation()
+    val rowsObs = new Observation()
     val mixed = Mixer.mix(withAttrs, mixCfg,
         element_at(split(col("__file"), "/"), -1), col("__ord"))
       .drop("attributes", "__ord", "__file")
@@ -674,17 +471,12 @@ object Main {
     // shard-size control — the reference's byte budget
     // (output.max_size_in_bytes, shard.rs:40-130) divided by the expected
     // document size
-    val out = cfg.get("output")
-    val outPath = out.get("path").asText()
-    val outFormat = opt(out, "format").getOrElse("parquet")
-    val outCodec = opt(out, "compression")
-    val maxRecords = Option(out.get("max_records_per_file")).map(_.asLong())
-    def sized(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]) = {
-      val w1 = maxRecords.map(n => w.option("maxRecordsPerFile", n)).getOrElse(w)
-      outCodec.map(c => w1.option("compression", c)).getOrElse(w1)
+    def sized(w: org.apache.spark.sql.DataFrameWriter[Row]) = {
+      val w1 = out.maxRecordsPerFile.map(n => w.option("maxRecordsPerFile", n)).getOrElse(w)
+      out.compression.map(c => w1.option("compression", c)).getOrElse(w1)
     }
-    outFormat match {
-      case "jsonl" =>
+    out.format match {
+      case Format.Jsonl =>
         // dolma document format names the text field "text"
         // (docs/data-format.md); the pipeline's internal name is
         // "content", so the jsonl egress renames — the reference's own
@@ -692,9 +484,9 @@ object Main {
         writeCommitted((path, mode) =>
           graft.sources.Jsonl.writeDocuments(
             mixed.withColumnRenamed("content", "text"), path,
-            codec = outCodec.getOrElse("gzip"), mode = mode,
-            maxRecordsPerFile = maxRecords.getOrElse(0L)), outPath)
-      case "table" =>
+            codec = out.compression.getOrElse("gzip"), mode = mode,
+            maxRecordsPerFile = out.maxRecordsPerFile.getOrElse(0L)), out.path)
+      case Format.Table =>
         // catalog output (the seam matching "format": "table" input): the
         // catalog's atomic commit replaces the staging/promote dance, and
         // file-grain resume doesn't compose with snapshot tables — same
@@ -702,22 +494,28 @@ object Main {
         require(!resuming,
           "table output does not compose with file-grain ledger resume: " +
             "the catalog's snapshot commit owns atomicity (see Main scaladoc)")
-        sized(mixed.write.mode(org.apache.spark.sql.SaveMode.Overwrite))
-          .saveAsTable(outPath)
+        sized(mixed.write.mode(SaveMode.Overwrite)).saveAsTable(out.path)
       case _ =>
         writeCommitted((path, mode) =>
-          sized(mixed.write.mode(mode)).parquet(path), outPath)
+          sized(mixed.write.mode(mode)).parquet(path), out.path)
     }
-    val rowsWritten = rowsObs.get.get("rows_written") match {
-      case Some(n: Number) => n.longValue()
-      case _ => 0L
+    def observed(obs: Observation, name: String): Long =
+      obs.get.get(name).collect { case n: Number => n.longValue() }.getOrElse(0L)
+    val rowsWritten = observed(rowsObs, "rows_written")
+    // the written documents, read back by the metrics and tokens stages.
+    // The jsonl egress wrote dolma format ("text"); the pipeline
+    // normalizes column names at ingest, so the read-back restores "id" /
+    // "content"
+    def written: DataFrame = {
+      val w = read(spark, out.format, Seq(out.path))
+      if (out.format == Format.Jsonl) w.withColumnRenamed("text", "content") else w
     }
 
     // analyze: the summary rows (#attributes × 2 of them) reach the driver
     // once — from the write's observation, or from the tables' `.agg`
-    for (a <- analyzeNode; summaryRows <- analyzeSummaries) {
+    for (a <- analyze; summaryRows <- analyzeSummaries) {
       val rows = summaryRows()
-      Option(a.get("summaries_output")).map(_.asText()).foreach { p =>
+      a.summariesOutput.foreach { p =>
         spark.createDataFrame(java.util.Arrays.asList(rows: _*),
           org.apache.spark.sql.Encoders.product[graft.functions.Binning.NamedSummary].schema)
           .write.mode("overwrite").parquet(p)
@@ -726,11 +524,10 @@ object Main {
         rows.map(r => r.getString(0) -> graft.functions.Binning.Summary(
           r.getSeq[Double](1).toVector, r.getSeq[Long](2).toVector,
           r.getLong(3), r.getDouble(4))).toMap,
-        numVizBins = Option(a.get("viz_bins")).map(_.asInt()).getOrElse(10),
-        showTotal = Option(a.get("total")).exists(_.asBoolean(false)))
-      Option(a.get("report")).map(_.asText()) match {
+        numVizBins = a.vizBins, showTotal = a.total)
+      a.report match {
         case Some(p) =>
-          val hp = new org.apache.hadoop.fs.Path(p)
+          val hp = new Path(p)
           val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
           val out = fs.create(hp, true)
           try out.write((report.mkString("\n") + "\n").getBytes("UTF-8"))
@@ -742,24 +539,11 @@ object Main {
     // metrics: rules from the observation (a driver-side row), lineage
     // from a column-pruned scan of the files just written — neither
     // re-runs the pipeline
-    metricsOut.foreach { p =>
-      val obsRow = rulesObs.get
-      val values = ruleNames.map(n => obsRow.get(n) match {
-        case Some(v: Number) => v.longValue()
-        case _ => 0L
-      })
-      spark.createDataFrame(
-        java.util.Collections.singletonList(
-          org.apache.spark.sql.Row.fromSeq(values)),
-        org.apache.spark.sql.types.StructType(ruleNames.map(
-          org.apache.spark.sql.types.StructField(_,
-            org.apache.spark.sql.types.LongType))))
+    c.metricsOutput.foreach { p =>
+      val ruleNames = "total" +: rules.map(_._1)
+      spark.createDataFrame(java.util.List.of(Row.fromSeq(ruleNames.map(observed(rulesObs, _)))),
+        StructType(ruleNames.map(StructField(_, LongType))))
         .write.mode("overwrite").parquet(p + "/rules")
-      val written = outFormat match {
-        case "jsonl" => graft.sources.Jsonl.readDocuments(spark, outPath)
-        case "table" => spark.read.table(outPath)
-        case _ => spark.read.parquet(outPath)
-      }
       Metrics.fileLineage(written, col("id"))
         .write.mode("overwrite").parquet(p + "/lineage")
     }
@@ -769,55 +553,33 @@ object Main {
     // memmap shards + a metadata table. Reads back the files the output
     // write just committed (same pattern as the metrics block) so the
     // pipeline still evaluates exactly once.
-    Option(cfg.get("tokens"))
-      .filter(t => Option(t.get("enabled")).forall(_.asBoolean(true)))
-      .foreach { t =>
-        val dest = t.get("destination").asText()
-        val docsOut = outFormat match {
-          // the jsonl egress wrote dolma format ("text"); the internal
-          // name is "content" — normalize on read-back
-          case "jsonl" => graft.sources.Jsonl.readDocuments(spark, outPath)
-            .withColumnRenamed("text", "content")
-          case "table" => spark.read.table(outPath)
-          case _ => spark.read.parquet(outPath)
-        }
-        // the pipeline normalizes column names at ingest: the mixed
-        // output always carries "id" / "content"
-        val toks = Option(t.get("tokenizer")).flatMap(tk => opt(tk, "path")) match {
-          case Some(vocabPath) =>
-            val tk = t.get("tokenizer")
-            def idOf(f: String): Option[Int] =
-              Option(tk.get(f)).filterNot(_.isNull).map(_.asInt())
-            graft.sources.TokenSink.hfTokenIds(col("content"), vocabPath,
-              eosId = idOf("eos_token_id"), bosId = idOf("bos_token_id"),
-              segment = Option(tk.get("segment_before_tokenization"))
-                .exists(_.asBoolean(false)))
-          case None => graft.sources.TokenSink.tokenIds(col("content"),
-            vocabSize = Option(t.get("vocab_size")).map(_.asInt()).getOrElse(1 << 16))
-        }
-        val bpt = Option(t.get("bytes_per_token")).map(_.asInt()).getOrElse(2)
-        // writeShards returns a LAZY side-effecting frame — checkpoint it
-        // so the downstream metadata write / reshard / export never
-        // re-run the shard-writing tasks
-        val meta = graft.sources.TokenSink.writeShards(
-          docsOut.withColumn("__toks", toks), col("id"), col("__toks"),
-          dest + "/shards", bytesPerToken = bpt,
-          numShards = Option(t.get("num_shards")).map(_.asInt()).getOrElse(0),
-          targetTokensPerShard = Option(t.get("target_tokens_per_shard"))
-            .map(_.asLong()).getOrElse(512L * 1024 * 1024)).localCheckpoint()
-        val minBytes = Option(t.get("min_shard_size_bytes")).map(_.asLong()).getOrElse(0L)
-        val (finalMeta, shardDir) =
-          if (minBytes > 0)
-            (graft.sources.TokenSink.reshard(spark, dest + "/shards", meta,
-              dest + "/resharded", minBytes, bpt).localCheckpoint(),
-              dest + "/resharded")
-          else (meta, dest + "/shards")
-        finalMeta.write.mode("overwrite").parquet(dest + "/metadata")
-        // optional dolma on-disk layout (.npy + .csv.gz sidecars) readable
-        // by the reference's own downstream consumers
-        if (Option(t.get("dolma_layout")).exists(_.asBoolean(false)))
-          graft.sources.TokenSink.exportDolmaLayout(shardDir, finalMeta, dest + "/dolma")
+    c.tokens.filter(_.enabled).foreach { t =>
+      val dest = t.destination
+      val toks = t.tokenizer.flatMap(tk => tk.path.map(tk -> _)) match {
+        case Some((tk, vocabPath)) =>
+          graft.sources.TokenSink.hfTokenIds(col("content"), vocabPath,
+            eosId = tk.eosTokenId, bosId = tk.bosTokenId,
+            segment = tk.segmentBeforeTokenization)
+        case None => graft.sources.TokenSink.tokenIds(col("content"), vocabSize = t.vocabSize)
       }
+      // writeShards returns a LAZY side-effecting frame — checkpoint it
+      // so the downstream metadata write / reshard / export never
+      // re-run the shard-writing tasks
+      val meta = graft.sources.TokenSink.writeShards(written.withColumn("__toks", toks),
+        col("id"), col("__toks"), dest + "/shards", t.bytesPerToken, t.numShards,
+        t.targetTokensPerShard).localCheckpoint()
+      val (finalMeta, shardDir) =
+        if (t.minShardSizeBytes > 0)
+          (graft.sources.TokenSink.reshard(spark, dest + "/shards", meta,
+            dest + "/resharded", t.minShardSizeBytes, t.bytesPerToken).localCheckpoint(),
+            dest + "/resharded")
+        else (meta, dest + "/shards")
+      finalMeta.write.mode("overwrite").parquet(dest + "/metadata")
+      // optional dolma on-disk layout (.npy + .csv.gz sidecars) readable
+      // by the reference's own downstream consumers
+      if (t.dolmaLayout)
+        graft.sources.TokenSink.exportDolmaLayout(shardDir, finalMeta, dest + "/dolma")
+    }
 
     // ledger commit: the pending input files, at file grain (idempotent
     // append; rows_written records this run's total). A resumed run also
@@ -836,15 +598,24 @@ object Main {
     bloomCommit.foreach(_())
   }
 
-  private def opt(n: JsonNode, field: String): Option[String] =
-    Option(n.get(field)).map(_.asText())
+  /** The one format dispatch: input documents, attribute tables and the
+    * read-backs of the written output. `schema` pins a parquet re-read of
+    * a subset of the input files to the first read's schema. */
+  private def read(spark: SparkSession, format: Format, paths: Seq[String],
+      schema: Option[StructType] = None, attributes: Boolean = false): DataFrame =
+    format match {
+      case Format.Jsonl if attributes => graft.sources.Jsonl.readAttributes(spark, paths: _*)
+      case Format.Jsonl => graft.sources.Jsonl.readDocuments(spark, paths: _*)
+      case Format.Table => spark.read.table(paths.head)
+      case Format.Warc => graft.sources.Warc.readRecords(spark, paths.mkString(","))
+      case Format.Parquet => schema.fold(spark.read)(spark.read.schema).parquet(paths: _*)
+    }
 
   /** Delete promoted `part-r<id>-*` files whose run-id is not in `keep`
     * (the committed run-ids plus the current one) — leftovers of attempts
     * that crashed between promote and ledger-commit. */
   private def sweepOrphanRuns(spark: SparkSession, dest: String,
       keep: Set[String]): Unit = {
-    import org.apache.hadoop.fs.Path
     val destPath = new Path(dest)
     val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(destPath)) return
@@ -867,7 +638,6 @@ object Main {
     * per file. */
   private def promoteStaging(spark: SparkSession, staging: String,
       dest: String, runId: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val destPath = new Path(dest)
     val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val prefix = s"part-r$runId-"

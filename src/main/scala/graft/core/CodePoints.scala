@@ -14,9 +14,6 @@ object CodePoints {
   /** Number of Unicode code points in `s` (== Python `len(s)`). */
   def length(s: String): Int = s.codePointCount(0, s.length)
 
-  /** UTF-16 index of code-point index `cp` (no bounds clamping). */
-  def toCharIndex(s: String, cp: Int): Int = s.offsetByCodePoints(0, cp)
-
   /** Python-style `s[startCp:endCp]` slice by code points, clamped. */
   def slice(s: String, startCp: Int, endCp: Int): String = {
     val n = length(s)

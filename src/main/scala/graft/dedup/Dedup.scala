@@ -57,22 +57,6 @@ object Dedup {
       .drop("__eligible")
   }
 
-  /** groupBy-based exact dedup keeping the min-ordinal row: cheaper than a
-    * window when the payload is wide (partial aggregation pre-shuffle).
-    * The key join is null-SAFE (`<=>`): null-keyed rows form one group and
-    * keep their min-ordinal row instead of silently vanishing through a
-    * null-unsafe equality. Requires `orderCol` unique per key (the usual
-    * monotonic id) — rows tying on (key, min ordinal) would all survive. */
-  def firstOccurrences(df: DataFrame, keyCol: Column, orderCol: Column): DataFrame = {
-    val keyed = df.withColumn("__key", keyCol).withColumn("__ord", orderCol)
-    val firsts = keyed.groupBy(col("__key"))
-      .agg(min(col("__ord")).as("__first_ord"))
-      .withColumnRenamed("__key", "__fkey")
-    keyed.join(firsts,
-        keyed("__key") <=> col("__fkey") && keyed("__ord") === col("__first_ord"))
-      .drop("__key", "__fkey", "__ord", "__first_ord")
-  }
-
   /** Paragraph-level dedup (deduper.rs:320-379): explode paragraphs
     * (separator `\n`), mark re-seen paragraph texts; emits one row per
     * duplicate paragraph with its span — the attribute the reference
@@ -139,8 +123,8 @@ object Dedup {
 
     val step = math.max(1, stride)
     // one-pass custom expression: tokenize + window + hash per paragraph
-    // in a tight loop (the declarative ngramHashesFromTokens chain built
-    // every gram as a string before hashing it)
+    // in a tight loop (a declarative split/slice/concat_ws chain would
+    // build every gram as a string before hashing it)
     val grams = paras
       .select($"id", $"__ord", $"para_index",
         explode(graft.functions.Hashing.ngramHashes($"para", n, step)).as("gram"))
@@ -152,17 +136,6 @@ object Dedup {
       .agg(count(lit(1)).as("total"), sum(when($"dup", 1).otherwise(0)).as("dups"))
       .withColumn("overlap_fraction", $"dups" / $"total")
       .withColumn("is_duplicate", $"overlap_fraction" >= threshold)
-  }
-
-  /** Expression building the n-gram hash array of a paragraph: tokenize on
-    * whitespace, xxhash64 each n-token window at the given stride; a
-    * paragraph with < n tokens yields one hash of the whole token list. */
-  def ngramHashesFromTokens(toks: Column, n: Int, stride: Int): Column = {
-    val numToks = size(toks)
-    val starts = sequence(lit(0), greatest(numToks - n, lit(0)), lit(stride))
-    when(numToks < n, array(xxhash64(concat_ws(" ", toks))))
-      .otherwise(transform(starts, s =>
-        xxhash64(concat_ws(" ", slice(toks, s + 1, lit(n))))))
   }
 
   /** Duplicate-CLUSTER resolution: connected components over a near-dup

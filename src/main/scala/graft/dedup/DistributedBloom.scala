@@ -21,14 +21,6 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 object DistributedBloom {
 
-  /** m bits for n items at the target FP rate, and the optimal k —
-    * the sizing law of bloom_filter.rs:27-60. */
-  def optimalSize(expectedItems: Long, fpRate: Double): (Long, Int) = {
-    val m = math.ceil(-expectedItems * math.log(fpRate) / (math.log(2) * math.log(2))).toLong
-    val k = math.max(1, math.round(m.toDouble / expectedItems * math.log(2)).toInt)
-    (m, k)
-  }
-
   /** Build a filter over a key column (distributed, one pass, no shuffle:
     * partial filters are built map-side and OR-merged). */
   def build(keys: Dataset[String], expectedItems: Long, fpRate: Double): BloomFilter = {
@@ -47,11 +39,11 @@ object DistributedBloom {
 
   // ---- sharded mode ----------------------------------------------------
   // One broadcast filter stops scaling around 1e9 keys (2.4 GB at FP 1e-4
-  // per the sizing law above). Sharded mode hash-partitions the key space
-  // into independent filters and CO-GROUPS probes with their shard's
-  // filter: an executor only ever materializes the filters of the shards
-  // it processes — memory per task is corpus-size-independent, and the
-  // probe is one shuffle on the shard id.
+  // per the sizing law of bloom_filter.rs:27-60). Sharded mode
+  // hash-partitions the key space into independent filters and CO-GROUPS
+  // probes with their shard's filter: an executor only ever materializes
+  // the filters of the shards it processes — memory per task is
+  // corpus-size-independent, and the probe is one shuffle on the shard id.
 
   @inline def shardOf(key: String, shards: Int): Int =
     (key.hashCode & 0x7fffffff) % shards

@@ -147,7 +147,6 @@ object ReferenceDedup {
       perPara.select($"id", $"start", $"end", $"score", $"idx"))
   }
 
-  /** Assemble per-doc ordered span arrays, keeping docs with no spans. */
   /** Paragraphs keyed for cross-run Bloom probing — the reference
     * deduper's paragraphs + bloom_filter mode (deduper.rs:306-379, with
     * the BFF as persisted state instead of the in-run window): one row
@@ -168,11 +167,7 @@ object ReferenceDedup {
         (length(col("text")) === 0).as("is_empty"))
   }
 
-  /** Roll (id, idx, start, end, score) hit rows into the dolma span shape
-    * covering every doc of `df` (docs without hits get empty lists). */
-  def rollupSpans(df: DataFrame, idCol: Column, hits: DataFrame): DataFrame =
-    collectSpans(df, idCol, hits)
-
+  /** Assemble per-doc ordered span arrays, keeping docs with no spans. */
   private def collectSpans(df: DataFrame, idCol: Column, spans: DataFrame): DataFrame = {
     val agg = spans
       .groupBy(col("id"))

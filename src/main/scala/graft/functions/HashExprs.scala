@@ -216,8 +216,8 @@ case class GramsWithHashesExpr(child: Expression, n: Int)
 /** Ordered n-gram hash stream of the whitespace token list (NOT
   * lowercased — mirrors `split(textCol, "\\s+")` with empties dropped):
   * one hash per n-token window at `stride`, a single whole-list hash when
-  * the text has < n tokens — the one-pass form of
-  * `Dedup.ngramHashesFromTokens(filter(split(text, "\\s+"), ...), n, stride)`.
+  * the text has < n tokens — computed in one pass over the text, with no
+  * per-gram string built before hashing.
   * Hash values are internal keys of the first-occurrence window; any
   * injective-w.h.p. hash preserves the marking (collision class 2^-64,
   * unchanged). */

@@ -35,13 +35,13 @@ object Jsonl {
       MapType(StringType, ArrayType(ArrayType(DoubleType))))))
 
   /** Read a documents tree (dataset/documents glob). */
-  def readDocuments(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(documentSchema).json(path)
+  def readDocuments(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(documentSchema).json(paths: _*)
 
   /** Read an attributes tree; triples `[start,end,score]` arrive as
     * double arrays and are restructured to the engine's span structs. */
-  def readAttributes(spark: SparkSession, path: String): DataFrame = {
-    spark.read.schema(attributeSchema).json(path)
+  def readAttributes(spark: SparkSession, paths: String*): DataFrame = {
+    spark.read.schema(attributeSchema).json(paths: _*)
       .select(col("id"),
         transform_values(col("attributes"), (_, spans) =>
           transform(spans, t => struct(

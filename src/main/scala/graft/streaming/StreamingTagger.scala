@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * "resume" is file-grain checkpointing, SURVEY §2.8) — this module is the
   * additive streaming path a live ingestion pipeline needs: the same
   * fused tagger battery and mixer predicates run incrementally over a
-  * stream of documents, plus watermarked windowed quality metrics.
+  * stream of documents, plus watermarked stateful sessionization.
   *
   * The batch/stream parity is structural: `TagRunner.tag` applies to a
   * streaming frame unchanged (its battery is a stateless narrow map), so a
@@ -16,20 +16,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the stream.
   */
 object StreamingTagger {
-
-  /** Watermarked per-window quality metrics over a timestamped doc
-    * stream: doc count, mean text length, and the fraction of docs with
-    * an email-ish marker per (window, lang). */
-  def windowedQualityMetrics(docs: DataFrame, tsCol: String,
-      watermark: String = "10 minutes", window_ : String = "5 minutes"): DataFrame = {
-    docs
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), window_), col("lang"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        avg(length(col("content"))).as("mean_chars"),
-        avg(when(col("content").contains("@"), 1.0).otherwise(0.0)).as("pii_rate"))
-  }
 
   /** Stateful stream: per-user session aggregation with
     * `flatMapGroupsWithState` and an EVENT-TIME timeout — the custom-state

@@ -890,7 +890,110 @@ class MainSpec extends AnyFunSuite {
           | "output": {"path": "/nonexistent/graft-out"}}""".stripMargin))
     }
     assert(e.getMessage.contains("\"taggerz\""))
-    Main.ConfigKeys.foreach(k => assert(e.getMessage.contains(k)))
+    Seq("input", "taggers", "tagger_modules", "experiment", "dedupe", "filter",
+      "span_replacement", "min_text_length", "output", "tokens", "analyze",
+      "attributes_output", "attributes_input", "metrics_output", "ledger")
+      .foreach(k => assert(e.getMessage.contains(k)))
+
+    // a misspelt key inside a block fails the same way: the message names
+    // the key path and the valid keys of that block
+    def typo(blocks: String) = intercept[IllegalArgumentException] {
+      Main.run(spark, om.readTree(
+        s"""{"input": {"format": "parquet", "path": "/nonexistent/graft-in"}, $blocks}"""))
+    }.getMessage
+    val out = """"output": {"path": "/nonexistent/graft-out"}"""
+    val nested = Seq(
+      s"""$out, "dedupe": {"mdoe": "paragraphs"}""" -> ("dedupe.mdoe", Seq("mode", "ngram")),
+      """"output": {"path": "/nonexistent/graft-out", "compresion": "gzip"}""" ->
+        ("output.compresion", Seq("compression", "max_records_per_file")),
+      s"""$out, "analyze": {"binz": 10}""" -> ("analyze.binz", Seq("bins", "viz_bins")),
+      s"""$out, "tokens": {"destination": "/nonexistent/t", "tokenizer": {"eos_tokenid": 2}}""" ->
+        ("tokens.tokenizer.eos_tokenid", Seq("eos_token_id", "bos_token_id")),
+      s"""$out, "dedupe": {"mode": "bloom",
+         |  "bloom_filter": {"path": "/nonexistent/b", "shard": 8}}""".stripMargin ->
+        ("dedupe.bloom_filter.shard", Seq("shards", "estimated_doc_count")))
+    for ((blocks, (path, valid)) <- nested) {
+      val msg = typo(blocks)
+      assert(msg.contains(s"\"$path\""), msg)
+      valid.foreach(k => assert(msg.contains(k), msg))
+    }
+
+    // every streams entry is parsed before the first stream runs
+    val streams = intercept[IllegalArgumentException] {
+      graft.config.PipelineConfig.parseAll(om.readTree(
+        """{"streams": [
+          |  {"input": {"path": "/nonexistent/a"}, "output": {"path": "/nonexistent/b"}},
+          |  {"input": {"path": "/nonexistent/a"}, "output": {"path": "/nonexistent/b"},
+          |   "dedupe": {"mdoe": "paragraphs"}}]}""".stripMargin))
+    }
+    assert(streams.getMessage.contains("\"streams[1].dedupe.mdoe\""), streams.getMessage)
+  }
+
+  test("an unknown format or dedupe mode fails at parse time, listing the valid values") {
+    val e = intercept[IllegalArgumentException] {
+      Main.run(spark, om.readTree(
+        """{"input": {"format": "jsnol", "path": "/nonexistent/graft-in"},
+          | "output": {"path": "/nonexistent/graft-out"}}""".stripMargin))
+    }
+    assert(e.getMessage.contains("input.format") && e.getMessage.contains("jsonl"), e.getMessage)
+    val mode = intercept[IllegalArgumentException] {
+      Main.run(spark, om.readTree(
+        """{"input": {"path": "/nonexistent/graft-in"}, "dedupe": {"mode": "paragraph"},
+          | "output": {"path": "/nonexistent/graft-out"}}""".stripMargin))
+    }
+    assert(mode.getMessage.contains("paragraphs") && mode.getMessage.contains("bloom_paragraphs"),
+      mode.getMessage)
+  }
+
+  test("a config of only input and output parses to the documented defaults") {
+    import graft.config._
+    val c = PipelineConfig.parse(om.readTree(
+      """{"input": {"path": "in"}, "output": {"path": "out"}}"""))
+    assert(c == PipelineConfig(input = Input("in"), output = Output("out")))
+    assert(c.experiment == "exp" && c.minTextLength == 0)
+    assert(c.input.format == Format.Parquet && c.input.id == "id" && c.input.text == "content")
+    assert(c.output.format == Format.Parquet)
+    assert(c.dedupe.isEmpty && c.analyze.isEmpty && c.tokens.isEmpty)
+    // the blocks' own defaults, once the block is present
+    val b = PipelineConfig.parse(om.readTree(
+      """{"input": {"path": "in"}, "output": {"path": "out"},
+        | "dedupe": {"bloom_filter": {"path": "state"}}, "analyze": {},
+        | "tokens": {"destination": "tok", "tokenizer": {}}}""".stripMargin))
+    val d = b.dedupe.get
+    assert(d.enabled && d.mode == "documents" && d.attributeName == "duplicate_paragraphs")
+    assert(d.ngram == Ngram(8, 0, 0.7))
+    val bf = d.bloomFilter.get
+    assert(bf.shards == 64 && bf.estimatedDocCount == 1000000L &&
+      bf.desiredFalsePositiveRate == 1e-4 && bf.key == "content_sha" && !bf.readOnly)
+    val a = b.analyze.get
+    assert(a.enabled && a.bins == 1000 && a.vizBins == 10 && a.regex.isEmpty && !a.total)
+    val t = b.tokens.get
+    assert(t.enabled && t.bytesPerToken == 2 && t.targetTokensPerShard == 512L * 1024 * 1024 &&
+      t.vocabSize == 65536 && t.numShards == 0 && t.minShardSizeBytes == 0L)
+    assert(t.tokenizer.get == Tokenizer(None, None, None, segmentBeforeTokenization = false))
+    // an explicit null is the default, not the text "null" or 0
+    val n = PipelineConfig.parse(om.readTree(
+      """{"input": {"path": "in"}, "output": {"path": "out"},
+        | "analyze": {"regex": null, "bins": null}}""".stripMargin))
+    assert(n.analyze.get.regex.isEmpty && n.analyze.get.bins == 1000)
+  }
+
+  test("analyze with \"regex\": null summarises the same names as no regex") {
+    val dir = Files.createTempDirectory("graft-analyze-null").toString
+    Seq(("a", "first doc"), ("b", "second doc")).toDF("id", "content").write.parquet(s"$dir/in")
+    def names(regex: String): Set[String] = {
+      val sub = java.util.UUID.randomUUID().toString
+      Main.run(spark, om.readTree(
+        s"""{"input": {"format": "parquet", "path": "$dir/in"},
+           | "taggers": ["char_length_v1"],
+           | "analyze": {"bins": 10, $regex "summaries_output": "$dir/$sub/s",
+           |   "report": "$dir/$sub/r.txt"},
+           | "output": {"path": "$dir/$sub/out", "format": "parquet"}}""".stripMargin))
+      summaries(s"$dir/$sub/s").keySet
+    }
+    val all = names("")
+    assert(all.nonEmpty)
+    assert(names(""""regex": null,""") == all)
   }
 }
 

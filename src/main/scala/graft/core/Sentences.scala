@@ -30,7 +30,7 @@ object Sentences {
       if (endChar > start) {
         val slice = text.substring(start, endChar)
         if (slice.exists(c => !Character.isWhitespace(c)))
-          out += TextSlice(text, startCp, endCp)
+          out += TextSlice(text, startCp, endCp, start, endChar)
       }
       start = endChar
       startCp = endCp

@@ -1,13 +1,15 @@
 package graft.core
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable.{ArrayBuffer, Builder}
 
-/** A zero-copy slice of a document (reference `TextSlice`,
+/** A slice of a document (reference `TextSlice`,
   * /root/reference/python/dolma/core/data_types.py:303-318).
-  * Offsets are Unicode code points into the parent string.
+  * `start`/`end` are Unicode code points into the parent string (the span
+  * offsets); `charStart`/`charEnd` are the same bounds in UTF-16 chars,
+  * which the splitters know anyway, so `text` is a plain `substring`.
   */
-final case class TextSlice(doc: String, start: Int, end: Int) {
-  def text: String = CodePoints.slice(doc, start, end)
+final case class TextSlice(doc: String, start: Int, end: Int, charStart: Int, charEnd: Int) {
+  def text: String = doc.substring(charStart, charEnd)
 }
 
 /** Text splitters replicating the reference's Python semantics exactly.
@@ -17,29 +19,32 @@ final case class TextSlice(doc: String, start: Int, end: Int) {
   * - pythonSplit: Python `str.split()` — runs of Unicode whitespace,
   *   empties dropped.
   * - splitLines: Python `str.splitlines()` terminator set.
+  * - wordTokens / regexSplitCount: the reference word tokenizer
+  *   `\w+|[^\w\s]+`, as a linear code-point scanner.
   *
-  * All offsets are code points (see [[CodePoints]]).
+  * All span offsets are code points (see [[CodePoints]]); slices also
+  * carry their UTF-16 bounds.
   */
 object TextSplit {
-
-  private val ParagraphRe = "([^\\n]*\\n|[^\\n]+$)".r
 
   /** Reference `split_paragraphs` (utils.py:92-98). Offsets in code points. */
   def splitParagraphs(text: String, removeEmpty: Boolean = true): Vector[TextSlice] = {
     if (text.isEmpty) return Vector.empty
-    val out = ArrayBuffer.empty[TextSlice]
+    val out = Vector.newBuilder[TextSlice]
     // The regex tiles the string: each paragraph is [^\n]*\n or a final
     // [^\n]+$. Walk manually (cheaper than regex and code-point exact).
     val n = text.length
     var i = 0          // utf-16 index
     var cp = 0         // code-point index
+    var segStart = 0
     var segStartCp = 0
     while (i < n) {
       val c = text.charAt(i)
       if (c == '\n') {
-        out += TextSlice(text, segStartCp, cp + 1)
-        segStartCp = cp + 1
         i += 1; cp += 1
+        addParagraph(out, text, segStart, i, segStartCp, cp, removeEmpty)
+        segStart = i
+        segStartCp = cp
       } else {
         // advance 2 only over a REAL surrogate pair: a lone high surrogate
         // (malformed UTF-16 from crawl JSON) must not swallow the next
@@ -49,11 +54,17 @@ object TextSplit {
         cp += 1
       }
     }
-    if (cp > segStartCp) out += TextSlice(text, segStartCp, cp)
-    val v = out.toVector
-    // Python str.strip() whitespace, not String.trim (<= U+0020): an
-    // NBSP-only paragraph is EMPTY to the reference and must drop
-    if (removeEmpty) v.filter(s => s.text.exists(c => !isPyWhitespace(c))) else v
+    if (i > segStart) addParagraph(out, text, segStart, i, segStartCp, cp, removeEmpty)
+    out.result()
+  }
+
+  // Python str.strip() whitespace, not String.trim (<= U+0020): an
+  // NBSP-only paragraph is EMPTY to the reference and must drop
+  private def addParagraph(out: Builder[TextSlice, Vector[TextSlice]],
+      text: String, a: Int, b: Int, aCp: Int, bCp: Int, removeEmpty: Boolean): Unit = {
+    var k = a
+    if (removeEmpty) while (k < b && isPyWhitespace(text.charAt(k))) k += 1
+    if (k < b) out += TextSlice(text, aCp, bCp, a, b)
   }
 
   /** Python `str.split()` — splits on runs of whitespace, drops empties. */
@@ -118,31 +129,116 @@ object TextSplit {
     * trailing empty after a final newline). */
   def splitNewline(text: String): Array[String] = text.split("\n", -1)
 
-  /** Reference word tokenizer `\w+|[^\w\s]+`
+  /** Token classes of the reference word tokenizer `\w+|[^\w\s]+`. */
+  private[graft] final val SpaceClass = 0
+  private[graft] final val WordClass = 1
+  private[graft] final val OtherClass = 2
+
+  /** Class of one code point under `java.util.regex`'s `(?U)` predicates
+    * (UNICODE_CHARACTER_CLASS, as the reference's `regex` module and the
+    * Rust regex crate are Unicode-aware: ASCII `\w` would split "héllo"
+    * into 3 tokens): `\s` is Zs/Zl/Zp, U+0009–U+000D and U+0085; `\w` is
+    * Alphabetic, Mn/Me/Mc/Nd/Pc, or the joiners U+200C/U+200D. A lone
+    * surrogate is neither, so it is "other". */
+  private[graft] def tokenClass(cp: Int): Int = {
+    val t = Character.getType(cp)
+    if (t == Character.SPACE_SEPARATOR || t == Character.LINE_SEPARATOR ||
+      t == Character.PARAGRAPH_SEPARATOR || (cp >= 0x9 && cp <= 0xd) || cp == 0x85) SpaceClass
+    else if (Character.isAlphabetic(cp) || t == Character.NON_SPACING_MARK ||
+      t == Character.ENCLOSING_MARK || t == Character.COMBINING_SPACING_MARK ||
+      t == Character.DECIMAL_DIGIT_NUMBER || t == Character.CONNECTOR_PUNCTUATION ||
+      cp == 0x200c || cp == 0x200d) WordClass
+    else OtherClass
+  }
+
+  /** [[tokenClass]] of every BMP char, surrogates included (64 KiB). */
+  private val BmpClass: Array[Byte] = Array.tabulate(0x10000)(c => tokenClass(c).toByte)
+
+  /** Offsets of the word tokens of one text, filled by [[wordTokenOffsets]]:
+    * token k spans code points `starts(k)` until `ends(k)` and UTF-16 chars
+    * `charStarts(k)` until `charEnds(k)`. Reusable across texts. */
+  final class TokenOffsets {
+    var count = 0
+    var starts = new Array[Int](64)
+    var ends = new Array[Int](64)
+    var charStarts = new Array[Int](64)
+    var charEnds = new Array[Int](64)
+
+    private[TextSplit] def add(cpStart: Int, cpEnd: Int, charStart: Int, charEnd: Int): Unit = {
+      if (count == starts.length) {
+        val cap = count * 2
+        starts = java.util.Arrays.copyOf(starts, cap)
+        ends = java.util.Arrays.copyOf(ends, cap)
+        charStarts = java.util.Arrays.copyOf(charStarts, cap)
+        charEnds = java.util.Arrays.copyOf(charEnds, cap)
+      }
+      starts(count) = cpStart
+      ends(count) = cpEnd
+      charStarts(count) = charStart
+      charEnds(count) = charEnd
+      count += 1
+    }
+  }
+
+  /** The reference word tokenizer `\w+|[^\w\s]+`
     * (/root/reference/python/dolma/taggers/code/utils.py:75-76 and
-    * src/wimbd/tokens.rs:11-20). Returns slices with code-point offsets. */
-  // (?U) = UNICODE_CHARACTER_CLASS: the reference's `regex` module and
-  // the Rust regex crate are Unicode-aware, so \w must cover accented
-  // letters/CJK — ASCII \w split "héllo" into 3 tokens instead of 1
-  private val WordTokenRe = "(?U)[\\w]+|[^\\w\\s]+".r
+    * src/wimbd/tokens.rs:11-20) as one linear pass over code points: a
+    * token is a maximal run of [[WordClass]] or of [[OtherClass]] code
+    * points, exactly the regex's leftmost-greedy matches. Counts the
+    * tokens and, when `out` is non-null, appends their offsets to it. */
+  private def scanTokens(text: String, out: TokenOffsets): Int = {
+    val n = text.length
+    var count = 0
+    var cls = SpaceClass // class of the run being read
+    var runStart = 0
+    var runStartCp = 0
+    var i = 0
+    var cp = 0
+    while (i < n) {
+      val c = text.charAt(i)
+      var width = 1
+      val k =
+        if (Character.isHighSurrogate(c) && i + 1 < n && Character.isLowSurrogate(text.charAt(i + 1))) {
+          width = 2
+          tokenClass(Character.toCodePoint(c, text.charAt(i + 1)))
+        } else BmpClass(c).toInt
+      if (k != cls) {
+        if (cls != SpaceClass) {
+          count += 1
+          if (out != null) out.add(runStartCp, cp, runStart, i)
+        }
+        cls = k
+        runStart = i
+        runStartCp = cp
+      }
+      i += width
+      cp += 1
+    }
+    if (cls != SpaceClass) {
+      count += 1
+      if (out != null) out.add(runStartCp, cp, runStart, n)
+    }
+    count
+  }
+
+  /** Replaces the contents of `out` with the word tokens of `text`. */
+  def wordTokenOffsets(text: String, out: TokenOffsets): Unit = {
+    out.count = 0
+    scanTokens(text, out)
+  }
+
+  /** The word tokens of `text` as slices. */
   def wordTokens(text: String): Vector[TextSlice] = {
-    // regex over UTF-16; convert offsets to code points only if needed
-    val bmp = CodePoints.isBmpOnly(text)
-    WordTokenRe.findAllMatchIn(text).map { m =>
-      if (bmp) TextSlice(text, m.start, m.end)
-      else TextSlice(text,
-        CodePoints.charToCodePointIndex(text, m.start),
-        CodePoints.charToCodePointIndex(text, m.end))
-    }.toVector
+    val o = new TokenOffsets
+    scanTokens(text, o)
+    Vector.tabulate(o.count)(k => TextSlice(text, o.starts(k), o.ends(k), o.charStarts(k), o.charEnds(k)))
   }
 
   /** Python `re.split(pattern, text)` semantics for the whitespace tokenizer
     * family: `len(regex.split(text))` counts segments BETWEEN matches,
-    * including leading/trailing empties (length.py:58-64). */
-  def regexSplitCount(text: String): Int = {
-    // split by the token regex: number of fragments = number of matches + 1
-    WordTokenRe.findAllMatchIn(text).length + 1
-  }
+    * including leading/trailing empties (length.py:58-64), i.e. the
+    * number of tokens + 1. */
+  def regexSplitCount(text: String): Int = scanTokens(text, null) + 1
 
   /** UAX-29 word segmentation via ICU (the same BreakIterator
     * UnisegLengthV1 uses — uniseg, the reference library, implements the

@@ -227,17 +227,32 @@ object GopherTagger {
   private[taggers] val scratch: ThreadLocal[Scratch] =
     ThreadLocal.withInitial(() => new Scratch)
 
-  /** statistics.median with empty→0.0 (gopher.py:18-21). */
-  def robustMedian(values: Seq[Int]): Double = {
-    if (values.isEmpty) return 0.0
-    val sorted = values.sorted
-    val n = sorted.length
+  /** statistics.median with empty→0.0 (gopher.py:18-21); sorts a copy. */
+  def robustMedian(values: Array[Int]): Double = {
+    val n = values.length
+    if (n == 0) return 0.0
+    val sorted = values.clone()
+    java.util.Arrays.sort(sorted)
     if (n % 2 == 1) sorted(n / 2).toDouble
     else (sorted(n / 2 - 1) + sorted(n / 2)) / 2.0
   }
 
   /** Python `re.split(r"\n+", text)`: empties only at boundaries. */
-  def splitNewlineRuns(text: String): Array[String] = text.split("\n+", -1)
+  def splitNewlineRuns(text: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    val n = text.length
+    var start = 0
+    var i = 0
+    while (i < n) {
+      if (text.charAt(i) == '\n') {
+        out += text.substring(start, i)
+        while (i < n && text.charAt(i) == '\n') i += 1
+        start = i
+      } else i += 1
+    }
+    out += text.substring(start, n)
+    out.result()
+  }
 
   def registerAll(): Unit = {
     TaggerRegistry.register("gopher_v1")(new GopherTagger(ignoreEmptyLines = false))

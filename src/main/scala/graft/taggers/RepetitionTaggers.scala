@@ -3,7 +3,7 @@ package graft.taggers
 import graft.core.{CodePoints, Span, TextSplit}
 
 import java.util.regex.Pattern
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable.{ArrayBuffer, Builder}
 
 /** Repetition detectors
   * (/root/reference/python/dolma/taggers/repetitions/).
@@ -15,7 +15,8 @@ import scala.collection.mutable.ArrayBuffer
   *   1..13 repeating ≥3 times (utils.py:40-118 numpy reshape algorithm,
   *   ported to plain loops). The reference tokenizes with an HF BPE
   *   (offline here); we tokenize with the `\w+|[^\w\s]+` word tokenizer and
-  *   hash tokens to ids — span offsets are token-boundary exact either way.
+  *   give each distinct token text an exact per-document id (equal ids iff
+  *   equal text) — span offsets are token-boundary exact either way.
   * - doc rollups doc_max_score / doc_max_length / doc_frac
   *   (repetitions_taggers.py:31-50).
   */
@@ -27,79 +28,92 @@ object RepetitionTaggers {
     * contain Int.MinValue (used as the pad mask). */
   def findPeriodicSequences(arr: Array[Int], maxPeriod: Int, minPeriod: Int = 1): Vector[Periodic] = {
     val out = Vector.newBuilder[Periodic]
-    val n = arr.length
-    val maxP = math.min(maxPeriod, n / 3)
-    val Mask = Int.MinValue
-    var period = minPeriod
-    while (period <= maxP) {
-      // np.pad adds `period - (len % period)` mask cells (utils.py:74) —
-      // a FULL mask row when the period divides the length. That row is
-      // what np.roll wraps row 0 onto, so row 0 can never match its
-      // "previous" row; wrapping onto the last DATA row instead produced
-      // false repetition spans ([1,2,1,2] must emit nothing) and
-      // +1-inflated times ([7,7,7] is 3 times, not 4).
-      val rows = n / period + 1
-      // eq(r)(c) = padded(r,c) == padded((r-1+rows)%rows, c)  (np.roll wraps)
-      val eq = Array.ofDim[Boolean](rows, period)
-      val rowAllEq = new Array[Boolean](rows)
-      var r = 0
-      while (r < rows) {
-        val pr = (r - 1 + rows) % rows
-        var all = true
-        var c = 0
-        while (c < period) {
-          val a = { val i = r * period + c; if (i < n) arr(i) else Mask }
-          val b = { val i = pr * period + c; if (i < n) arr(i) else Mask }
-          val e = a == b
-          eq(r)(c) = e
-          if (!e) all = false
-          c += 1
-        }
-        rowAllEq(r) = all
-        r += 1
+    val maxP = math.min(maxPeriod, arr.length / 3)
+    if (minPeriod <= maxP) {
+      // one row mask for every period: the first period has the most rows
+      val rowAllEq = new Array[Boolean](arr.length / minPeriod + 1)
+      var period = minPeriod
+      while (period <= maxP) {
+        addPeriodic(arr, period, rowAllEq, out)
+        period += 1
       }
-      // group consecutive all-equal rows
-      var i = 0
-      while (i < rows) {
-        if (rowAllEq(i)) {
-          var j = i
-          while (j + 1 < rows && rowAllEq(j + 1)) j += 1
-          val startRow = i
-          val endRow = j
-          // trailing-True run of the row before the group (wraps like
-          // Python negative indexing for startRow == 0)
-          val prevRow = eq((startRow - 1 + rows) % rows)
-          val so0 = startLastConsecutiveTrue(prevRow)
-          val startOffset = if (so0 > 0) period - so0 else 0
-          // leading-True run of the row after the group
-          val endOffset =
-            if (endRow + 1 < rows) endFirstConsecutiveTrue(eq(endRow + 1)) else 0
-          val startPos = (startRow - 1) * period - startOffset
-          val endPos = (endRow + 1) * period + endOffset
-          val times = (endPos - startPos) / period
-          if (times > 2)
-            out += Periodic(math.max(0, startPos), math.min(n, endPos), period, times)
-          i = j + 1
-        } else i += 1
-      }
-      period += 1
     }
     out.result()
   }
 
-  /** Length of the leading True run (utils.py:6-17). */
-  def endFirstConsecutiveTrue(a: Array[Boolean]): Int = {
+  /** The runs of one period (the loop body of utils.py:62-116). */
+  private def addPeriodic(arr: Array[Int], period: Int, rowAllEq: Array[Boolean],
+      out: Builder[Periodic, Vector[Periodic]]): Unit = {
+    val n = arr.length
+    // np.pad adds `period - (len % period)` mask cells (utils.py:74) —
+    // a FULL mask row when the period divides the length. That row is
+    // what np.roll wraps row 0 onto, so row 0 can never match its
+    // "previous" row; wrapping onto the last DATA row instead produced
+    // false repetition spans ([1,2,1,2] must emit nothing) and
+    // +1-inflated times ([7,7,7] is 3 times, not 4).
+    val rows = n / period + 1
+    var r = 0
+    while (r < rows) {
+      var c = 0
+      while (c < period && cellEq(arr, period, rows, r, c)) c += 1
+      rowAllEq(r) = c == period
+      r += 1
+    }
+    // group consecutive all-equal rows
     var i = 0
-    while (i < a.length && a(i)) i += 1
+    while (i < rows) {
+      if (rowAllEq(i)) {
+        var j = i
+        while (j + 1 < rows && rowAllEq(j + 1)) j += 1
+        val startRow = i
+        val endRow = j
+        // trailing-True run of the row before the group (wraps like
+        // Python negative indexing for startRow == 0)
+        val prevRow = (startRow - 1 + rows) % rows
+        val so0 = lastTrueRunStart(period, c => cellEq(arr, period, rows, prevRow, c))
+        val startOffset = if (so0 > 0) period - so0 else 0
+        // leading-True run of the row after the group
+        val endOffset =
+          if (endRow + 1 < rows) leadingTrueRun(period, c => cellEq(arr, period, rows, endRow + 1, c))
+          else 0
+        val startPos = (startRow - 1) * period - startOffset
+        val endPos = (endRow + 1) * period + endOffset
+        val times = (endPos - startPos) / period
+        if (times > 2)
+          out += Periodic(math.max(0, startPos), math.min(n, endPos), period, times)
+        i = j + 1
+      } else i += 1
+    }
+  }
+
+  /** Cell (r, c) of the reference's equality matrix: the padded array,
+    * reshaped to `rows` × `period`, equals itself rolled down one row
+    * (np.roll wraps row 0 onto the last row). Pad cells are a mask that
+    * no token id equals. */
+  @inline private def cellEq(arr: Array[Int], period: Int, rows: Int, r: Int, c: Int): Boolean = {
+    val i = r * period + c
+    val j = if (r == 0) (rows - 1) * period + c else i - period
+    val a = if (i < arr.length) arr(i) else Int.MinValue
+    val b = if (j < arr.length) arr(j) else Int.MinValue
+    a == b
+  }
+
+  /** Length of the leading True run (utils.py:6-17). */
+  def endFirstConsecutiveTrue(a: Array[Boolean]): Int = leadingTrueRun(a.length, a(_))
+
+  /** Start index of the trailing True run, -1 if none (utils.py:20-23). */
+  def startLastConsecutiveTrue(a: Array[Boolean]): Int = lastTrueRunStart(a.length, a(_))
+
+  private def leadingTrueRun(len: Int, p: Int => Boolean): Int = {
+    var i = 0
+    while (i < len && p(i)) i += 1
     i
   }
 
-  /** Start index of the trailing True run, -1 if none (utils.py:20-23). */
-  def startLastConsecutiveTrue(a: Array[Boolean]): Int = {
-    var i = a.length - 1
-    var run = 0
-    while (i >= 0 && a(i)) { run += 1; i -= 1 }
-    if (run > 0) a.length - run else -1
+  private def lastTrueRunStart(len: Int, p: Int => Boolean): Int = {
+    var i = len - 1
+    while (i >= 0 && p(i)) i -= 1
+    if (i < len - 1) i + 1 else -1
   }
 
   // UNIX_LINES: Python '.' excludes only \n (Java default also excludes
@@ -152,14 +166,72 @@ object RepetitionTaggers {
   /** Periodic token sequences over one text slice (the shared
     * `_extract_from_text` of repetitions_taggers.py:100-126). */
   private def extractTokenReps(text: String): Vector[Span] = {
-    val tokens = TextSplit.wordTokens(text)
-    if (tokens.isEmpty) return Vector.empty
-    val ids = tokens.map(t => t.text.hashCode & 0x7fffffff).toArray
-    val seqs = findPeriodicSequences(ids, maxPeriod = 13, minPeriod = 1)
+    val sc = tokenScratch.get()
+    val tokens = sc.tokens
+    TextSplit.wordTokenOffsets(text, tokens)
+    if (tokens.count == 0) return Vector.empty
+    val seqs = findPeriodicSequences(sc.tokenIds(text), maxPeriod = 13, minPeriod = 1)
     seqs.map { s =>
-      Span(tokens(s.start).start, tokens(s.end - 1).end, "repetition", s.times.toDouble)
+      Span(tokens.starts(s.start), tokens.ends(s.end - 1), "repetition", s.times.toDouble)
     }
   }
+
+  /** Per-thread scratch of the token-repetition pass: the token offsets of
+    * the current text and an open-addressing table from token text to id,
+    * probed with `regionMatches`, so no token substring is built. */
+  private final class TokenScratch {
+    val tokens = new TextSplit.TokenOffsets
+    private var firstToken = new Array[Int](256) // 1 + index of the id's first token; 0 = empty
+    private var slotHash = new Array[Int](256)
+
+    /** Exact per-text ids of `tokens`: two tokens get the same id iff
+      * their texts are equal. Ids are dense, in order of first sighting. */
+    def tokenIds(text: String): Array[Int] = {
+      val m = tokens.count
+      val starts = tokens.charStarts
+      val ends = tokens.charEnds
+      var cap = 256
+      while (cap < m * 2) cap *= 2
+      if (firstToken.length < cap) {
+        firstToken = new Array[Int](cap)
+        slotHash = new Array[Int](cap)
+      } else java.util.Arrays.fill(firstToken, 0, cap, 0)
+      val ids = new Array[Int](m)
+      var nextId = 0
+      var k = 0
+      while (k < m) {
+        val a = starts(k)
+        val len = ends(k) - a
+        var h = 0
+        var q = a
+        while (q < a + len) { h = 31 * h + text.charAt(q); q += 1 }
+        var slot = scala.util.hashing.byteswap32(h) & (cap - 1)
+        var found = false
+        while (!found) {
+          val f = firstToken(slot)
+          if (f == 0) {
+            firstToken(slot) = k + 1
+            slotHash(slot) = h
+            ids(k) = nextId
+            nextId += 1
+            found = true
+          } else {
+            val o = f - 1
+            if (slotHash(slot) == h && ends(o) - starts(o) == len &&
+              text.regionMatches(starts(o), text, a, len)) {
+              ids(k) = ids(o)
+              found = true
+            } else slot = (slot + 1) & (cap - 1)
+          }
+        }
+        k += 1
+      }
+      ids
+    }
+  }
+
+  private val tokenScratch: ThreadLocal[TokenScratch] =
+    ThreadLocal.withInitial(() => new TokenScratch)
 
   /** Periodic token sequences, three reference variants:
     * - `tokenizer_repetitions_v1` (repetitions_taggers.py:100-126): raw

@@ -50,6 +50,71 @@ class CoreSpec extends AnyFunSuite {
     assert(withEmpty.map(_.text) == Vector("para one\n", "\n", "para two\n", "last"))
   }
 
+  // the regex the code-point scanner replaced, kept here as its oracle
+  private val WordTokenOracle = "(?U)[\\w]+|[^\\w\\s]+".r
+
+  test("token scanner classifies every code point as (?U)\\s / (?U)\\w do") {
+    val ws = java.util.regex.Pattern.compile("(?U)\\s").matcher("")
+    val w = java.util.regex.Pattern.compile("(?U)\\w").matcher("")
+    // the scanner's class, read through the scanner itself: a space makes
+    // no token; a word char joins a leading "a" into one token
+    def scanned(s: String): Int =
+      if (TextSplit.regexSplitCount(s) == 1) TextSplit.SpaceClass
+      else if (TextSplit.regexSplitCount("a" + s) == 2) TextSplit.WordClass
+      else TextSplit.OtherClass
+    var mismatches = Vector.empty[Int]
+    var cp = 0
+    while (cp <= Character.MAX_CODE_POINT) {
+      // a lone surrogate (U+D800..U+DFFF) is one char, as in malformed UTF-16
+      val s = new String(Character.toChars(cp))
+      val isSpace = ws.reset(s).matches()
+      val isWord = w.reset(s).matches()
+      assert(!(isSpace && isWord))
+      val want =
+        if (isSpace) TextSplit.SpaceClass else if (isWord) TextSplit.WordClass else TextSplit.OtherClass
+      if (scanned(s) != want || TextSplit.tokenClass(cp) != want) mismatches :+= cp
+      cp += 1
+    }
+    assert(mismatches.isEmpty, mismatches.take(20).map(c => f"U+$c%04X").mkString(", "))
+  }
+
+  test("wordTokens and regexSplitCount equal the \\w+|[^\\w\\s]+ regex on fuzzed text") {
+    val pool = Vector("a", "Z", "7", "_", " ", "  ", "\t", "\n", "\r\n", ".", ",", "!?", "-", "'",
+      "é", "e\u0301", "\u0301", "\u0e31", "\u00a0", "\u0085", "\u2028", "\u3000", "\u200c",
+      "\u200d", "\u00b2", "\u2160", "\u0660", "\u05d0", "\u4e2d", "\uff3f", "\ud835\udc00",
+      "\ud835\udfce", "\ud83d\ude00", "\ud800", "\udc00", "\udc00\ud800", "\u001c")
+    val rnd = new scala.util.Random(20261017L)
+    (0 until 20000).foreach { _ =>
+      val s = Iterator.fill(rnd.nextInt(24))(pool(rnd.nextInt(pool.length))).mkString
+      val want = WordTokenOracle.findAllMatchIn(s).map { m =>
+        (s.codePointCount(0, m.start), s.codePointCount(0, m.end), m.start, m.end, m.matched)
+      }.toVector
+      val got = TextSplit.wordTokens(s).map(t => (t.start, t.end, t.charStart, t.charEnd, t.text))
+      assert(got == want, s"text=${s.map(c => f"\\u${c.toInt}%04x").mkString}")
+      assert(TextSplit.regexSplitCount(s) == want.length + 1)
+    }
+  }
+
+  test("slices of astral text: .text equals the code-point slice") {
+    val doc = "\ud83d\ude00 first para. Next \ud835\udc00\ud835\udc01 one!\n\n" +
+      "\u00a0\n\ud83d\ude00\ud83d\ude00 e\u0301t\u00e9 \u4e2d\u6587.\nlast \ud83d\ude00"
+    val sliceSets = Seq(
+      "splitParagraphs" -> TextSplit.splitParagraphs(doc),
+      "splitParagraphs(removeEmpty = false)" -> TextSplit.splitParagraphs(doc, removeEmpty = false),
+      "wordTokens" -> TextSplit.wordTokens(doc),
+      "Sentences.split" -> graft.core.Sentences.split(doc))
+    sliceSets.foreach { case (what, slices) =>
+      assert(slices.length > 2, what)
+      slices.foreach { t =>
+        assert(t.text == CodePoints.slice(doc, t.start, t.end), s"$what $t")
+        assert(CodePoints.length(t.text) == t.end - t.start, s"$what $t")
+      }
+    }
+    // the NBSP-only paragraph is blank to Python's str.strip()
+    assert(TextSplit.splitParagraphs(doc).length ==
+      TextSplit.splitParagraphs(doc, removeEmpty = false).length - 2)
+  }
+
   test("splitLines matches Python splitlines") {
     assert(TextSplit.splitLines("a\nb\n").toSeq == Seq("a", "b"))
     assert(TextSplit.splitLines("a\r\nb").toSeq == Seq("a", "b"))

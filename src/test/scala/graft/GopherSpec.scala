@@ -68,4 +68,21 @@ class GopherSpec extends AnyFunSuite {
     // character_count denominator = sum of word lengths = 3+5+3 = 11
     assert(score("fraction_of_characters_in_duplicate_lines") == 6.0 / 11)
   }
+
+  test("splitNewlineRuns equals split(\"\\n+\", -1) on fuzzed text") {
+    val pool = Vector("a", "bc", " ", "\n", "\n\n", "\n\n\n", "\r", "\u00e9", "\ud83d\ude00")
+    val rnd = new scala.util.Random(7L)
+    val fuzzed = Iterator.fill(5000)(Iterator.fill(rnd.nextInt(12))(pool(rnd.nextInt(pool.length))).mkString)
+    (Iterator("", "\n", "\n\n", "a", "\na", "a\n", "\n\na\n\nb\n\n") ++ fuzzed).foreach { s =>
+      assert(GopherTagger.splitNewlineRuns(s).toSeq == s.split("\n+", -1).toSeq, s"text=${s.replace("\n", "\\n")}")
+    }
+  }
+
+  test("robustMedian: statistics.median, empty is 0.0, input unchanged") {
+    assert(GopherTagger.robustMedian(Array.empty[Int]) == 0.0)
+    val odd = Array(5, 1, 3)
+    assert(GopherTagger.robustMedian(odd) == 3.0)
+    assert(odd.toSeq == Seq(5, 1, 3))
+    assert(GopherTagger.robustMedian(Array(4, 1, 3, 2)) == 2.5)
+  }
 }

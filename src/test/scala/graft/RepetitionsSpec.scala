@@ -200,4 +200,22 @@ class RepetitionsSpec extends AnyFunSuite {
     assert(graft.core.CodePoints.slice(doc, s.start.toInt, s.end.toInt)
       .contains("foo bar foo bar"))
   }
+
+  test("tokenizer_repetitions_v2r2: a token hash collision is not a repetition") {
+    assert("Aa".hashCode == "BB".hashCode)
+    val t = new RepetitionTaggers.TokenRepetitionsTagger()
+    assert(!t.predict("x Aa BB Aa y").exists(_.typ == "repetition"))
+    val reps = t.predict("x Aa Aa Aa y").filter(_.typ == "repetition")
+    assert(reps.map(s => (s.start, s.end, s.score)) == Vector((2L, 10L, 3.0)))
+  }
+
+  test("tokenizer_repetitions_v2r2: span offsets are code points after an astral char") {
+    val doc = "\ud83d\ude00 ab ab ab ab end" // the emoji is 1 code point, 2 chars
+    val spans = new RepetitionTaggers.TokenRepetitionsTagger().predict(doc)
+    val reps = spans.filter(_.typ == "repetition")
+    assert(reps.map(s => (s.start, s.end, s.score)) == Vector((2L, 13L, 4.0)))
+    assert(graft.core.CodePoints.slice(doc, 2, 13) == "ab ab ab ab")
+    val maxLen = spans.find(_.typ == "doc_max_length_repetition").get
+    assert((maxLen.start, maxLen.end, maxLen.score) == (0L, 17L, 11.0))
+  }
 }
